@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import graft.api.Fields
+import graft.util.Lineage
 import scala.collection.mutable
 
 /** Core-Storm per-tuple topology façade: the `TopologyBuilder` / `IRichSpout`
@@ -500,8 +501,8 @@ object LocalTopology {
       val rows = tuples.zipWithIndex.map { case ((st, v), i) =>
         Row((i % spec.parallelism), i.toLong, st, ser(v))
       }
-      val df = spark.createDataFrame(rows.asJava, tupleSchema)
-        .localCheckpoint(true) // consumed by several bolts: cut once
+      // consumed by several bolts: cut once
+      val df = Lineage.cut(spark.createDataFrame(rows.asJava, tupleSchema))
       declared(id).foreach { case (st, _) =>
         outputs((id, st)) = df.where(F.col("stream") === st)
       }
@@ -594,7 +595,8 @@ object LocalTopology {
       val tickRate = tickFreq
       val ackAcc = spark.sparkContext.longAccumulator(s"graft.core.$id.acked")
       val failAcc = spark.sparkContext.longAccumulator(s"graft.core.$id.failed")
-      val out = inputDF
+      // materialize: run the bolt exactly once
+      val out = Lineage.cut(inputDF
         .repartition(par, F.col("task"))
         .sortWithinPartitions("task", "seq")
         .mapPartitions { it =>
@@ -643,8 +645,7 @@ object LocalTopology {
           }
           outRows.iterator
         }(org.apache.spark.sql.Encoders.row(tupleSchema))
-        .toDF()
-        .localCheckpoint(true) // materialize: run the bolt exactly once
+        .toDF())
       declared(id).foreach { case (st, _) =>
         outputs((id, st)) = out.where(F.col("stream") === st)
       }

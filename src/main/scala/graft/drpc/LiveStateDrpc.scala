@@ -161,9 +161,6 @@ object LiveStateDrpc {
     }
   }
 
-  /** [[registerStateQuery]] with snapshot reuse: per-request cost is the
-    * `shape` job over cached state blocks, not a fresh statestore read.
-    * Returns the snapshot handle (close it at shutdown). */
   /** Marker literal for [[registerStateQueryPlanCached]] — an opaque
     * string no real argument equals. */
   private val ArgMarker = "__graft_drpc_arg_7f3a1c__"
@@ -252,6 +249,9 @@ object LiveStateDrpc {
     snap
   }
 
+  /** [[registerStateQuery]] with snapshot reuse: per-request cost is the
+    * `shape` job over cached state blocks, not a fresh statestore read.
+    * Returns the snapshot handle (close it at shutdown). */
   def registerStateQueryCached(drpc: LocalDRPC, spark: SparkSession,
                                name: String, checkpointDir: String,
                                stateVarName: String)(

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import graft.plans.BpeExpressions
+import graft.util.Lineage
 
 /** Byte-pair-encoding tokenizer training and segmentation — the tokenizer-
   * fitting stage of a training-data pipeline, Spark-first.
@@ -19,8 +20,8 @@ import graft.plans.BpeExpressions
   * counts, partial-aggregated map-side), a 1-row argmax collect (the
   * trainer's convergence probe — same driver contact as
   * `duplicateClusters`), and a vocab-local native-expression rewrite with
-  * a per-iteration `localCheckpoint` lineage cut (reliable checkpoint at
-  * cluster scale via `reliableCheckpoint = true`). Industrial vocabularies
+  * a per-iteration lineage cut (a reliable checkpoint at cluster scale
+  * once a checkpoint dir is set). Industrial vocabularies
   * (30k+ merges) batch several non-conflicting merges per round to
   * amortize the shuffle — `train(maxMergesPerRound = n)` does exactly
   * that, with a per-round validation probe that guarantees the merge
@@ -86,16 +87,14 @@ object Bpe {
     * On any violation the round falls back to the plain sequential single
     * merge, so batching is a pure throughput knob, never a semantics one. */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
-            minPairCount: Long = 2, reliableCheckpoint: Boolean = false,
+            minPairCount: Long = 2,
             maxMergesPerRound: Int = 1,
             roundCounter: java.util.concurrent.atomic.AtomicInteger = null): DataFrame = {
     require(numMerges > 0, s"numMerges must be positive, got $numMerges")
     require(maxMergesPerRound >= 1,
       s"maxMergesPerRound must be >= 1, got $maxMergesPerRound")
     val spark = docs.sparkSession
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
-    var vocab = cut(vocabulary(docs, textCol))
+    var vocab = Lineage.cut(vocabulary(docs, textCol))
     val merges = Vector.newBuilder[(Int, String, String, Long)]
     var rank = 0
     var exhausted = false
@@ -195,7 +194,7 @@ object Bpe {
         // nested mergePair expressions apply the batch IN ORDER within one
         // vocabulary pass — per-word application, so identical to one full
         // pass per merge
-        vocab = cut(vocab.withColumn("syms",
+        vocab = Lineage.cut(vocab.withColumn("syms",
           chosen.foldLeft(F.col("syms")) { case (c, (l, r, _)) =>
             BpeExpressions.mergePair(c, l, r)
           }))

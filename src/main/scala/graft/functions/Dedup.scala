@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
+import graft.util.Lineage
 
 /** Deduplication operators for training-data pipelines, designed for the
   * 100 TB regime:
@@ -190,8 +191,7 @@ object Dedup {
     * self-joins and the two id-equi-joins to re-attach shingles. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String, k: Int = 3,
                    numHashes: Int = 8, rowsPerBand: Int = 2,
-                   threshold: Double = 0.7,
-                   reliableCheckpoint: Boolean = false): DataFrame = {
+                   threshold: Double = 0.7): DataFrame = {
     // signature computed ONCE and lineage-cut (r16): the candidate stage's
     // bucket-count guard and its collect side are two subplans, and the
     // un-cut spelling re-ran the fused shingle+minhash pass (the dominant
@@ -203,15 +203,10 @@ object Dedup {
     // candidate subtrees then read the cache — an eager cut pays a separate
     // blocking job per call, which q141 (nearDupPairs over a 1/16 sample,
     // where the saved recompute is small) measured as a +0.3 s regression.
-    // r17 (VERDICT r16 #6): the cut honors `reliableCheckpoint` — a lazy
-    // RELIABLE checkpoint(false) in the preemptible-executor posture, so an
-    // executor loss after the signature materializes stays recoverable;
-    // localCheckpoint blocks would die with the executor.
-    def lazyCut(d: DataFrame): DataFrame =
-      if (reliableCheckpoint) d.checkpoint(false) else d.localCheckpoint(false)
-    val sig = lazyCut(minhashSignature(df.select(F.col(idCol), F.col(textCol)),
+    val sig = Lineage.cut(minhashSignature(df.select(F.col(idCol), F.col(textCol)),
         textCol, k, numHashes)
-      .select(F.col(idCol) +: (0 until numHashes).map(i => F.col(s"mh$i")): _*))
+      .select(F.col(idCol) +: (0 until numHashes).map(i => F.col(s"mh$i")): _*),
+      eager = false)
     val withSig = lshBands(sig, numHashes, rowsPerBand)
     val cands = lshCandidatePairs(withSig, idCol, numHashes / rowsPerBand)
     // Verification: shingles are computed in the SCAN stage of each attach
@@ -260,12 +255,11 @@ object Dedup {
     require(sampleMod > 0, s"sampleMod must be positive, got $sampleMod")
     // the sample feeds three subplans (truth, candidates, verified) — cut
     // it once so the corpus scans once, not three times
-    val sample = df
+    val sample = Lineage.cut(df
       .where(graft.plans.Expressions.md5Bucket(
         F.concat(F.lit("s|"), F.col(idCol).cast("string")), sampleMod) === 0L)
       .where(Text.tokenCount(F.col(textCol)) >= k)
-      .select(F.col(idCol), F.col(textCol))
-      .localCheckpoint(true)
+      .select(F.col(idCol), F.col(textCol)))
     val d = sample.select(F.col(idCol).as("id"),
       F.array_distinct(shingles(F.col(textCol), k)).as("ds"))
     val sz = d.select(F.col("id"), F.size(F.col("ds")).cast("long").as("n"))
@@ -326,9 +320,8 @@ object Dedup {
     * grams and are absent from the output. */
   def contentNovelty(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3): DataFrame = {
-    val grams = df.select(F.col(idCol),
-      F.explode(F.array_distinct(shingles(F.col(textCol), k))).as("__g"))
-      .localCheckpoint(true)
+    val grams = Lineage.cut(df.select(F.col(idCol),
+      F.explode(F.array_distinct(shingles(F.col(textCol), k))).as("__g")))
     val first = grams.groupBy("__g").agg(F.min(idCol).as("__first"))
     grams.join(first, "__g")
       .groupBy(idCol)
@@ -468,8 +461,8 @@ object Dedup {
       maxBucketSize: Int = 10000): DataFrame = {
     require(numHashes % rowsPerBand == 0, "numHashes must divide into bands")
     val sigCols = (0 until numHashes).map(i => F.col(s"mh$i"))
-    val sigd = minhashSignature(df.select(F.col(idCol), F.col(textCol)),
-      textCol, k, numHashes).localCheckpoint(true)
+    val sigd = Lineage.cut(minhashSignature(df.select(F.col(idCol), F.col(textCol)),
+      textCol, k, numHashes))
     val withSig = lshBands(sigd, numHashes, rowsPerBand)
     val cands = lshCandidatePairs(withSig, idCol, numHashes / rowsPerBand,
       maxBucketSize)
@@ -534,17 +527,14 @@ object Dedup {
     * colliding on volume — use winnowing/minhash tiers for looser
     * similarity instead. */
   def simhashNearPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucketSize: Int = 10000,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
     val nBands = maxHamming + 1
     require(maxHamming >= 0 && 60 % nBands == 0,
       s"maxHamming+1 must divide 60, got $maxHamming")
     val width = 60 / nBands
     val mask = (1L << width) - 1
-    def cut(d: DataFrame): DataFrame =
-      if (reliableCheckpoint) d.checkpoint(true) else d.localCheckpoint(true)
     // reused three times (band build + both verify sides): cut once
-    val sigs = cut(df.select(F.col(idCol).as("id"),
+    val sigs = Lineage.cut(df.select(F.col(idCol).as("id"),
       simhashPortable(F.col(textCol)).as("__sig")))
     val banded = sigs.withColumns((0 until nBands).map { i =>
       s"band$i" -> F.expr(s"(__sig >> ${i * width}) & ${mask}L")
@@ -624,14 +614,12 @@ object Dedup {
     * quadratically; audit the drops with [[winnowOversizeBuckets]]. */
   def winnowOverlapCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: Int, minShared: Long = 1L,
-      maxBucketSize: Int = 10000, reliableCheckpoint: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 10000): DataFrame = {
     // the fps subtree feeds BOTH the bucket-size filter and the join probe
     // side — without a cut Spark recomputes the winnow scan (md5 per k-gram
     // over the full text, the dominant cost) twice. The materialized frame
     // is tiny: (id, 32-char fp) pairs only, the text never leaves its scan.
-    def cut(d: DataFrame): DataFrame =
-      if (reliableCheckpoint) d.checkpoint(true) else d.localCheckpoint(true)
-    val fps = cut(df
+    val fps = Lineage.cut(df
       .select(F.col(idCol).as("id"),
         F.explode(winnowFingerprints(F.col(textCol), k, w)).as("fp")))
     val okFps = fps.groupBy("fp").agg(F.count(F.lit(1)).as("__n"))
@@ -779,31 +767,19 @@ object Dedup {
     * fixed 32-char key regardless of `n`. Coverage is per-position
     * (`collect_set`), bounded by the document's own token count. */
   def maskDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 8, minCount: Long = 2L,
-      reliableCheckpoint: Boolean = false): DataFrame = {
-    def cut(d: DataFrame): DataFrame =
-      if (reliableCheckpoint) d.checkpoint(true) else d.localCheckpoint(true)
+      n: Int = 8, minCount: Long = 2L): DataFrame = {
     // toks feeds the grams build AND the final mask join — the lazy cut
     // (r16) materializes it under the grams checkpoint and the mask join
     // reads the cache, so the regex tokenizer runs once, not twice. The
     // materialized frame is (id, tokens) ≈ corpus text size — the
     // trigramLmScore trade (Text.scala), accepted there since r13.
-    // r17 (ADVICE r16): the cut honors `reliableCheckpoint` — a lazy
-    // RELIABLE checkpoint in that mode, so the mask-reassembly join stays
-    // recoverable after an executor loss (localCheckpoint blocks would
-    // not be).
-    val toks =
-      (if (reliableCheckpoint)
-        df.select(F.col(idCol), Text.tokens(F.col(textCol)).as("__t"))
-          .checkpoint(false)
-      else
-        df.select(F.col(idCol), Text.tokens(F.col(textCol)).as("__t"))
-          .localCheckpoint(false))
+    val toks = Lineage.cut(
+      df.select(F.col(idCol), Text.tokens(F.col(textCol)).as("__t")), eager = false)
     // the grams frame feeds BOTH the dup-count aggregate and the probe
     // join — cut it ((id, pos, fp) only, text stays behind) so the
     // dominant tokenize+shingle+md5 scan runs once, not twice (the same
     // discipline as [[winnowOverlapCandidates]])
-    val grams = cut(toks.select(F.col(idCol),
+    val grams = Lineage.cut(toks.select(F.col(idCol),
         F.posexplode(graft.plans.Expressions.shingleArray(F.col("__t"), n))
           .as(Seq("pos", "g")))
       .select(F.col(idCol), F.col("pos"), F.md5(F.col("g")).as("fp")))
@@ -840,16 +816,13 @@ object Dedup {
     * [[maskDuplicatedSpans]] with the dup-count aggregate replaced by the
     * broadcast eval set. */
   def maskEvalSpans(df: DataFrame, idCol: String, textCol: String,
-      eval: DataFrame, evalTextCol: String, n: Int = 8,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      eval: DataFrame, evalTextCol: String, n: Int = 8): DataFrame = {
     // toks feeds the grams build AND the final mask join — lazily cut
     // (r17, the q125 maskDuplicatedSpans treatment) so the regex
     // tokenizer runs once, not twice. Same (id, tokens) ≈ corpus-text
-    // storage trade, same reliable spelling for the preemptible posture.
-    val toks0 = df.select(F.col(idCol), Text.tokens(F.col(textCol)).as("__t"))
-    val toks =
-      if (reliableCheckpoint) toks0.checkpoint(false)
-      else toks0.localCheckpoint(false)
+    // storage trade.
+    val toks = Lineage.cut(
+      df.select(F.col(idCol), Text.tokens(F.col(textCol)).as("__t")), eager = false)
     val evalFps = F.broadcast(eval
       .select(F.explode(shingles(F.col(evalTextCol), n)).as("__g"))
       .select(F.md5(F.col("__g")).as("fp")).distinct())
@@ -965,22 +938,6 @@ object Dedup {
     df.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Duplicate-cluster consolidation: connected components over a candidate
-    * pair list (e.g. [[nearDupPairs]] output), labeling every member with
-    * the minimum id reachable through the pair graph → (id, cluster_id).
-    * Near-dup is not transitive, so after LSH+verify produces PAIRS, a real
-    * dedup pass still has to pick one survivor per connected GROUP — this is
-    * that step.
-    *
-    * Distributed min-label propagation: each iteration joins the label table
-    * to the (bidirectional) edge list and takes the min over self + its
-    * neighbors' labels; converges in O(graph diameter) rounds. Dup clusters
-    * are shallow (stars / short chains — diameter rarely above the band
-    * count), so the default cap is generous. Each round is one equi-join
-    * shuffle on ids — never a transitive-closure materialization — and the
-    * lineage is cut per round (`localCheckpoint`) so plans stay flat at any
-    * scale. Converged when no label changed.
-    */
   /** Keep-one-per-near-dup-cluster filter: [[nearDupPairs]] →
     * [[duplicateClusters]] → drop every non-canonical member. The anti-join
     * moves only ids; payload columns never shuffle. */
@@ -1066,15 +1023,25 @@ object Dedup {
         F.sum(F.when(F.col("__k") === "common", 1L).otherwise(0L)).as("n_common"))
   }
 
+  /** Duplicate-cluster consolidation: connected components over a candidate
+    * pair list (e.g. [[nearDupPairs]] output), labeling every member with
+    * the minimum id reachable through the pair graph → (id, cluster_id).
+    * Near-dup is not transitive, so after LSH+verify produces PAIRS, a real
+    * dedup pass still has to pick one survivor per connected GROUP — this is
+    * that step.
+    *
+    * Distributed min-label propagation: each iteration joins the label table
+    * to the (bidirectional) edge list and takes the min over self + its
+    * neighbors' labels; converges in O(graph diameter) rounds. Dup clusters
+    * are shallow (stars / short chains — diameter rarely above the band
+    * count), so the default cap is generous. Each round is one equi-join
+    * shuffle on ids — never a transitive-closure materialization — and the
+    * lineage is cut per round ([[graft.util.Lineage.cut]]) so plans stay
+    * flat at any scale. Converged when no label changed.
+    */
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 12, reliableCheckpoint: Boolean = false): DataFrame = {
+      maxIter: Int = 12): DataFrame = {
     require(maxIter > 0, s"maxIter must be positive, got $maxIter")
-    // localCheckpoint stores to executor memory/disk — fine single-node and
-    // fast, but a lost executor kills the lineage at cluster scale. With a
-    // checkpoint dir set, `reliableCheckpoint = true` swaps in the
-    // fault-tolerant variant (same plan-flattening effect, HDFS-backed).
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
     val fwd = pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
     // ONE exchange keyed on dst at build (r16, guide §2.4): every
     // propagation round joins edges⋈labels ON dst, and the old
@@ -1084,13 +1051,13 @@ object Dedup {
     // the (src,dst) clustering), so the build pays one exchange instead of
     // the old one — and the eager checkpoint freezes the layout
     // (LogicalRDD keeps outputPartitioning), so rounds only move labels.
-    val edges = cut(fwd.union(fwd.select(F.col("dst").as("src"), F.col("src").as("dst")))
+    val edges = Lineage.cut(fwd.union(fwd.select(F.col("dst").as("src"), F.col("src").as("dst")))
       .repartition(F.col("dst"))
       .distinct())
     // seed with min(self, direct neighbors) — exactly the first propagation
     // round, folded into initialization (one less join round; stars and
     // pairs, the dominant dup shapes, converge immediately)
-    var labels = cut(edges.groupBy("src").agg(F.min("dst").as("__m"))
+    var labels = Lineage.cut(edges.groupBy("src").agg(F.min("dst").as("__m"))
       .select(F.col("src").as("id"),
         F.least(F.col("src"), F.col("__m")).as("cluster_id")))
     var iter = 0
@@ -1114,7 +1081,7 @@ object Dedup {
       // (no instrumentation bridge in the path); the convergence probe then
       // scans the just-materialized checkpoint blocks — an early-exiting
       // isEmpty over local partitions, never a recompute of the join.
-      lastWithFlag = cut(next)
+      lastWithFlag = Lineage.cut(next)
       anyChanged = !lastWithFlag.where(F.col("__chg")).isEmpty
       labels = lastWithFlag.drop("__chg")
       liveCut.unpersist(blocking = false)

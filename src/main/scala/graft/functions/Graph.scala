@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import graft.util.Lineage
 
 /** Graph analytics over id-pair edge lists — the authority/centrality tier
   * a curation pipeline runs on top of its duplicate-candidate graph (which
@@ -34,20 +35,16 @@ object Graph {
     * `src` and ranks by `node` so the share join is co-located, leaving
     * the contribution aggregation as the only per-round exchange. Lineage
     * is cut every round, so plan depth is O(1) per iteration, not
-    * O(2^iters). `reliableCheckpoint = true` swaps localCheckpoint for the
-    * HDFS-backed variant (same discipline as
-    * [[Dedup.duplicateClusters]]).
+    * O(2^iters). Set a checkpoint dir to make the cuts the HDFS-backed
+    * reliable variant (same discipline as [[Dedup.duplicateClusters]]).
     *
     * Returns one row per node: (node, deg, rank_ppm).
     */
   def pageRankPpm(pairs: DataFrame, aCol: String, bCol: String,
-      iters: Int = 3, dampPpm: Long = 850000L,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      iters: Int = 3, dampPpm: Long = 850000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampPpm >= 0L && dampPpm <= 1000000L,
       s"dampPpm must be in [0, 1e6], got $dampPpm")
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
     val fwd = pairs.select(F.col(aCol).as("src"), F.col(bCol).as("dst"))
     // ONE exchange keyed on src at build (r16, guide §2.4): the per-round
     // share join is keyed on src, and the old (src,dst)-partitioned cut
@@ -57,7 +54,7 @@ object Graph {
     // dedup runs partition-local); the checkpoint freezes the layout
     // (LogicalRDD keeps outputPartitioning), so iterations only ever move
     // rank shares, never edges.
-    val edges = cut(fwd
+    val edges = Lineage.cut(fwd
       .union(fwd.select(F.col("dst").as("src"), F.col("src").as("dst")))
       .repartition(F.col("src"))
       .distinct())
@@ -67,7 +64,7 @@ object Graph {
     // deg reuses edges' src-partitioning (no exchange for this groupBy).
     val deg = edges.groupBy(F.col("src").as("node"))
       .agg(F.count(F.lit(1)).as("deg"))
-    var state = cut(deg.select(F.col("node"), F.col("deg"),
+    var state = Lineage.cut(deg.select(F.col("node"), F.col("deg"),
       F.lit(0L).as("rank_ppm")))
     val n = state.count() // one scalar to the driver; the node count
     require(n > 0L, "pageRankPpm: empty edge list")
@@ -84,7 +81,7 @@ object Graph {
         .groupBy(F.col("dst").as("node"))
         .agg(F.sum("__s").as("__c"))
       // damp * c <= 8.5e5 * 1e6 — far inside BIGINT, no widening needed
-      state = cut(state
+      state = Lineage.cut(state
         .join(sums, Seq("node"), "left")
         .select(F.col("node"), F.col("deg"), F.expr(
           s"CAST($telePpm AS BIGINT) + $dampPpm * coalesce(__c, CAST(0 AS BIGINT)) DIV 1000000")

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
+import graft.util.Lineage
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, processed in partition-sized
@@ -972,11 +973,10 @@ object Multimodal {
       s"maxHamming+1 must divide 64, got $maxHamming")
     val width = 64 / nBands
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val sigs = perceptualHashes(df.select(F.col(idCol), F.col(payloadCol)),
+    val sigs = Lineage.cut(perceptualHashes(df.select(F.col(idCol), F.col(payloadCol)),
         payloadCol, codec, grid, hasher)
       .where(F.col("phash").isNotNull)
-      .select(F.col(idCol).as("id"), F.col("phash").as("__sig"))
-      .localCheckpoint(true)
+      .select(F.col(idCol).as("id"), F.col("phash").as("__sig")))
     val banded = sigs.withColumns((0 until nBands).map { i =>
       s"band$i" -> F.shiftrightunsigned(F.col("__sig"), i * width)
         .bitwiseAND(F.lit(mask))

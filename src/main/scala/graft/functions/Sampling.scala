@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
+import graft.util.Lineage
 
 /** Deterministic sampling for training-data pipelines.
   *
@@ -365,11 +366,10 @@ object Sampling {
     // cut the |sources|-row frame once: without it the scalar total
     // re-derives the aggregate from scratch and the CORPUS scans twice
     // (same q111/q116/q124 discipline — the cut frame is tiny)
-    val perSource = df.groupBy(F.col(sourceCol).as("source"))
+    val perSource = Lineage.cut(df.groupBy(F.col(sourceCol).as("source"))
       .agg(F.count(F.lit(1)).as("n_docs"),
         F.sum(Text.tokenCount(F.col(textCol)).cast("long")).as("n_tokens"))
-      .withColumn("isqrt", F.floor(F.sqrt(F.col("n_tokens"))).cast("long"))
-      .localCheckpoint(true)
+      .withColumn("isqrt", F.floor(F.sqrt(F.col("n_tokens"))).cast("long")))
     val total = perSource.agg(F.sum("isqrt").as("__tot"))
     perSource.crossJoin(F.broadcast(total))
       .withColumn("weight_ppm", F.expr("isqrt * 1000000L DIV __tot"))

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import graft.util.Lineage
 
 /** Scale utilities: skew-safe aggregation and co-located (bucketed) joins —
   * the partitioning discipline a 100 TB deployment needs around the core
@@ -251,10 +252,9 @@ object Scale {
     val spark = df.sparkSession
     import spark.implicits._
     val keys = df.select(F.col(keyCol).cast("string")).as[String]
-    val sketch = keys.mapPartitions(it => misraGriesWithTotal(it, k))
-      .toDF(keyCol, "__n")
-      // tiny frame (≤ k+1 rows per partition) read by two consumers below
-      .localCheckpoint(true)
+    // tiny frame (≤ k+1 rows per partition) read by two consumers below
+    val sketch = Lineage.cut(keys.mapPartitions(it => misraGriesWithTotal(it, k))
+      .toDF(keyCol, "__n"))
     val candidates = sketch.where(F.col(keyCol).isNotNull)
       .select(keyCol).distinct()
     val total = sketch.where(F.col(keyCol).isNull)
@@ -507,8 +507,7 @@ object Scale {
   }
 
   def bloomSemiJoin(big: DataFrame, small: DataFrame, bigKey: String,
-                    smallKey: String, fpp: Double = 0.03,
-                    reliableCheckpoint: Boolean = false): DataFrame = {
+                    smallKey: String, fpp: Double = 0.03): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
@@ -523,14 +522,9 @@ object Scale {
     // (the sizing count, the bloom build, the final semi-join side) and
     // un-cut it re-ran the build-side scan + distinct per job; the lazy
     // cut materializes it once under the count and the later jobs read
-    // the cache — ids only, never payloads. r17 (VERDICT r16 #6): honors
-    // `reliableCheckpoint` (lazy RELIABLE checkpoint) so the preemptible-
-    // executor posture keeps the key frame recoverable.
-    val keys0 = small.select(F.col(smallKey))
-      .where(F.col(smallKey).isNotNull).distinct()
-    val keys =
-      if (reliableCheckpoint) keys0.checkpoint(false)
-      else keys0.localCheckpoint(false)
+    // the cache — ids only, never payloads.
+    val keys = Lineage.cut(small.select(F.col(smallKey))
+      .where(F.col(smallKey).isNotNull).distinct(), eager = false)
     // size the sketch from the real build-side cardinality (one narrow
     // pass over the DISTINCT keys — the frame the join reuses below)
     val n = math.max(keys.count(), 1L)
@@ -896,22 +890,19 @@ object Scale {
     * the right trade when damage is spread across most shards (every
     * shard re-reads anyway) or the sides' payloads are wide (md5 over
     * the canon string dominates); keep it off when the copy is
-    * shard-clustered and damage is localized. `reliableCheckpoint`
-    * swaps every cut here to the HDFS-backed spelling. */
+    * shard-clustered and damage is localized. A checkpoint dir makes
+    * every cut here the HDFS-backed reliable one. */
   def copyRepairPlan(src: DataFrame, dst: DataFrame, idCol: String,
                      cols: Seq[String], shards: Int = 16,
-                     cutRowHashes: Boolean = false,
-                     reliableCheckpoint: Boolean = false): DataFrame = {
-    def lazyCut(d: DataFrame): DataFrame =
-      if (reliableCheckpoint) d.checkpoint(false) else d.localCheckpoint(false)
+                     cutRowHashes: Boolean = false): DataFrame = {
     // with the row-hash cut, the manifest tier derives from the SAME
     // lazily-cut (shard, __id, __h) frame the row tier diffs on — the
     // md5 canonicalization scan runs once per side, materialized inside
     // the `bad` checkpoint job below
     val (rowSrc, rowDst) =
       if (cutRowHashes)
-        (Some(lazyCut(digestRowProjection(src, idCol, cols, shards))),
-         Some(lazyCut(digestRowProjection(dst, idCol, cols, shards))))
+        (Some(Lineage.cut(digestRowProjection(src, idCol, cols, shards), eager = false)),
+         Some(Lineage.cut(digestRowProjection(dst, idCol, cols, shards), eager = false)))
       else (None, None)
     val mSrc = rowSrc.map(r => digestManifestFrom(r.select("shard", "__h")))
       .getOrElse(digestManifest(src, idCol, cols, shards))
@@ -921,13 +912,11 @@ object Scale {
       .getOrElse(digestManifest(dst, idCol, cols, shards))
       .select(F.col("shard"), F.col("cnt").as("dst_cnt"),
         F.col("digest_hi").as("__dh"), F.col("digest_lo").as("__dl"))
-    val bad0 = mSrc.join(mDst, Seq("shard"), "full")
+    val bad = Lineage.cut(mSrc.join(mDst, Seq("shard"), "full")
       .na.fill(0L, Seq("src_cnt", "dst_cnt", "__sh", "__sl", "__dh", "__dl"))
       .where(F.col("src_cnt") =!= F.col("dst_cnt") ||
         F.col("__sh") =!= F.col("__dh") || F.col("__sl") =!= F.col("__dl"))
-      .select("shard", "src_cnt", "dst_cnt")
-    val bad =
-      if (reliableCheckpoint) bad0.checkpoint() else bad0.localCheckpoint()
+      .select("shard", "src_cnt", "dst_cnt"))
     val s = rowSrc.getOrElse(digestRowProjection(src, idCol, cols, shards))
       .join(F.broadcast(bad.select("shard")), Seq("shard"))
       .select(F.col("shard").as("__ss"), F.col("__id"), F.col("__h").as("__hs"))
@@ -1022,7 +1011,7 @@ object Scale {
       Nil, "__h", desc = false, tieBreak = Nil, k = k, distinct = true)
     // 1-row model: sorted sample keys + the rank-picked boundary array;
     // checkpoint-cut so the two consumers don't each re-run the sample scan
-    val model = sampled
+    val model = Lineage.cut(sampled
       .agg(F.sort_array(F.collect_list("__key")).as("__sk"),
         F.count(F.lit(1)).as("n_samp"))
       // try_element_at: an EMPTY input (nothing non-null to sample) yields
@@ -1030,13 +1019,11 @@ object Scale {
       // ANSI INVALID_ARRAY_INDEX crash
       .withColumn("__bs", F.expr(
         s"""transform(sequence(1, ${buckets - 1}),
-              i -> try_element_at(__sk, greatest(1, CAST((i * n_samp) DIV $buckets AS INT))))"""))
-      .localCheckpoint()
-    val counts = keyed.crossJoin(F.broadcast(model.select("__bs")))
+              i -> try_element_at(__sk, greatest(1, CAST((i * n_samp) DIV $buckets AS INT))))""")))
+    val counts = Lineage.cut(keyed.crossJoin(F.broadcast(model.select("__bs")))
       .withColumn("bucket",
         F.expr("CAST(size(filter(__bs, b -> b <= __key)) AS BIGINT)"))
-      .groupBy("bucket").agg(F.count(F.lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy("bucket").agg(F.count(F.lit(1)).as("cnt")))
     val totals = counts.agg(F.sum("cnt").as("n_total"))
     model
       .select(F.explode(F.sequence(F.lit(0), F.lit(buckets - 1))).as("__b"),
@@ -1218,9 +1205,8 @@ object Scale {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val vals = df.where(F.col(col).isNotNull)
       .select(F.col(col).cast("long").as("__v"))
-    val totals = vals.agg(F.count(F.lit(1)).as("n_total"),
-      F.min("__v").as("__mn"), F.max("__v").as("__mx"))
-      .localCheckpoint()
+    val totals = Lineage.cut(vals.agg(F.count(F.lit(1)).as("n_total"),
+      F.min("__v").as("__mn"), F.max("__v").as("__mx")))
     // Per-row bin index: LONG arithmetic when the range provably fits
     // (codegen integer ops — measured 2.4x faster than the decimal
     // spelling on a 6M-row column), decimal only for ranges past
@@ -1305,9 +1291,8 @@ object Scale {
         Some(boundaries(i.toInt)))
     } :+ ((boundaries.size.toLong, Some(boundaries.last), None))
     val frameDf = frame.toDF("bin", "lo", "hi")
-    val withCnt = frameDf.join(binned, Seq("bin"), "left")
-      .na.fill(0L, Seq("cnt"))
-      .localCheckpoint()
+    val withCnt = Lineage.cut(frameDf.join(binned, Seq("bin"), "left")
+      .na.fill(0L, Seq("cnt")))
     val totals = withCnt.agg(F.sum("cnt").as("__tot"))
     withCnt.crossJoin(F.broadcast(totals))
       .withColumn("share_ppm", F.expr(
@@ -1338,9 +1323,8 @@ object Scale {
     val hb = fixedBinHistogram(b, col, boundaries)
       .select(F.col("bin"), F.col("cnt").as("cnt_b"),
         F.col("share_ppm").as("share_b_ppm"))
-    val joined = ha.join(hb, Seq("bin"))
-      .withColumn("delta_ppm", F.expr("share_a_ppm - share_b_ppm"))
-      .localCheckpoint()
+    val joined = Lineage.cut(ha.join(hb, Seq("bin"))
+      .withColumn("delta_ppm", F.expr("share_a_ppm - share_b_ppm")))
     val tv = joined.agg(
       F.expr("CAST(sum(abs(delta_ppm)) DIV 2 AS BIGINT)").as("tv_ppm"))
     joined.crossJoin(F.broadcast(tv))
@@ -1398,7 +1382,7 @@ object Scale {
         F.sum(F.when(F.col("__v").between(lo, hi), 1L).otherwise(0L))
           .as(s"__a$i")
       }
-    val one = vals.agg(aggs.head, aggs.tail: _*).localCheckpoint()
+    val one = Lineage.cut(vals.agg(aggs.head, aggs.tail: _*))
     val rows = probes.zipWithIndex.map { case ((lo, hi), i) =>
       one.select(
         F.lit(lo).as("probe_lo"), F.lit(hi).as("probe_hi"),
@@ -1466,7 +1450,7 @@ object Scale {
       } ++ binConds.zipWithIndex.map { case (c, j) =>
         F.sum(F.when(c, 1L).otherwise(0L)).as(s"__b$j")
       })
-    val one = vals.agg(aggs.head, aggs.tail: _*).localCheckpoint()
+    val one = Lineage.cut(vals.agg(aggs.head, aggs.tail: _*))
     def dec(s: String) = s"CAST($s AS DECIMAL(38,0))"
     val rows = probes.zipWithIndex.map { case ((lo, hi), i) =>
       val terms = (0 to m).map { j =>
@@ -1543,15 +1527,15 @@ object Scale {
         .select(F.col(s"mn_$tag"), F.col(s"mx_$tag"),
           F.array((0 to m).map(j => F.col(s"__c$j")): _*).as(s"cnts_$tag"))
     }
-    val ha = oneSide(a, aCol, "a").localCheckpoint()
-    val hb = oneSide(b, bCol, "b").localCheckpoint()
+    val ha = Lineage.cut(oneSide(a, aCol, "a"))
+    val hb = Lineage.cut(oneSide(b, bCol, "b"))
     val actual = a.select(F.col(aCol).cast("long").as("__k"))
       .where(F.col("__k").isNotNull)
       .join(b.select(F.col(bCol).cast("long").as("__k"))
         .where(F.col("__k").isNotNull), Seq("__k"))
       .agg(F.count(F.lit(1)).as("actual"))
     def dec(s: String) = s"CAST($s AS DECIMAL(38,0))"
-    val perBin = ha.crossJoin(hb)
+    val perBin = Lineage.cut(ha.crossJoin(hb)
       .select(F.explode(F.sequence(F.lit(0), F.lit(m))).as("__b"),
         F.col("mn_a"), F.col("mx_a"), F.col("mn_b"), F.col("mx_b"),
         F.col("cnts_a"), F.col("cnts_b"))
@@ -1572,8 +1556,7 @@ object Scale {
         s"""CAST(CASE WHEN __w < 1 THEN ${dec("0")}
               ELSE (${dec("cnt_a")} * cnt_b - (${dec("cnt_a")} * cnt_b) % __w) / __w
             END AS BIGINT)"""))
-      .select("bin", "cnt_a", "cnt_b", "est")
-      .localCheckpoint()
+      .select("bin", "cnt_a", "cnt_b", "est"))
     val headline = perBin.agg(F.sum("est").as("est_total"))
     perBin.crossJoin(F.broadcast(headline))
       .crossJoin(F.broadcast(actual))
@@ -1615,14 +1598,13 @@ object Scale {
     val spark = a.sparkSession
     import spark.implicits._
     val frame = (0 to m).map(_.toLong).toDF("bin")
-    val perBin = frame
+    val perBin = Lineage.cut(frame
       .join(F.broadcast(side(a, aCol, "a")), Seq("bin"), "left")
       .join(F.broadcast(side(b, bCol, "b")), Seq("bin"), "left")
       .na.fill(0L, Seq("cnt_a", "ndv_a", "cnt_b", "ndv_b"))
       .withColumn("est", F.expr(
         """CAST(CAST(cnt_a AS DECIMAL(38,0)) * cnt_b
-               DIV greatest(ndv_a, ndv_b, 1L) AS BIGINT)"""))
-      .localCheckpoint()
+               DIV greatest(ndv_a, ndv_b, 1L) AS BIGINT)""")))
     val actual = a.select(F.col(aCol).cast("long").as("__k"))
       .where(F.col("__k").isNotNull)
       .join(b.select(F.col(bCol).cast("long").as("__k"))
@@ -1651,14 +1633,14 @@ object Scale {
     val sketch = quantileSketch(
       df.select(F.lit("g").as("__g"), F.col(idCol), F.col(valueCol)),
       "__g", idCol, valueCol, k)
-    val sk = sketch.agg(F.sort_array(F.collect_list("__v")).as("__vs"),
-      F.count(F.lit(1)).as("n_samp")).localCheckpoint()
+    val sk = Lineage.cut(sketch.agg(F.sort_array(F.collect_list("__v")).as("__vs"),
+      F.count(F.lit(1)).as("n_samp")))
     val vals = df.where(F.col(valueCol).isNotNull && F.col(idCol).isNotNull)
       .select(F.col(valueCol).cast("long").as("__v"))
     val aggs = F.count(F.lit(1)).as("n") +: probes.zipWithIndex.map {
       case (p, i) => F.sum(F.when(F.col("__v") <= p, 1L).otherwise(0L)).as(s"__a$i")
     }
-    val one = vals.agg(aggs.head, aggs.tail: _*).localCheckpoint()
+    val one = Lineage.cut(vals.agg(aggs.head, aggs.tail: _*))
     probes.zipWithIndex.map { case (p, i) =>
       one.crossJoin(F.broadcast(sk)).select(
         F.lit(p).as("probe"), F.col("n"), F.col(s"__a$i").as("actual_le"),
@@ -1739,10 +1721,10 @@ object Scale {
         F.col(weightCol).cast("long") > 0L)
       .groupBy(F.col(groupCol), F.col(valueCol).cast("long").as("__v"))
       .agg(F.sum(F.col(weightCol).cast("long")).as("__w"))
-    val agg = gv.groupBy(groupCol)
+    // one distinct-value pass feeds every quantile row
+    val agg = Lineage.cut(gv.groupBy(groupCol)
       .agg(F.expr("sort_array(collect_list(struct(__v, __w)))").as("__vw"),
-        F.sum("__w").as("total_w"))
-      .localCheckpoint() // one distinct-value pass feeds every quantile row
+        F.sum("__w").as("total_w")))
     quantilesPpm.map { q =>
       // target = ceil(q·Σw / 1e6) through DECIMAL (Σw·1e6 overflows
       // BIGINT past ~9e12 total weight); the fold takes the FIRST value
@@ -1879,12 +1861,11 @@ object Scale {
   def bandedJointCounts(df: DataFrame, aCol: String, bCol: String,
       maxJointCells: Long = 10000000L): DataFrame = {
     require(maxJointCells >= 1, s"maxJointCells must be >= 1, got $maxJointCells")
-    val joint = df
+    val joint = Lineage.cut(df
       .where(F.col(aCol).isNotNull && F.col(bCol).isNotNull)
       .select(F.col(aCol).cast("long").as("__a"),
         F.col(bCol).cast("long").as("__b"))
-      .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint()
+      .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c")))
     val cells = joint.count()
     require(cells <= maxJointCells,
       s"bandedJointCounts: ($aCol, $bCol) has $cells joint cells " +
@@ -2109,7 +2090,7 @@ object Scale {
     // the unpivot reads the audit frame once PER ESTIMATOR — cut the
     // ≤|probes|-row frame so the audit pipeline (corpus groupBy + probe
     // folds) runs once, not |estimators| times
-    val cut = audit.localCheckpoint(true)
+    val cut = Lineage.cut(audit)
     estimators.map { case (name, qerrCol) =>
       cut.select(F.lit(name).as("estimator"),
         F.col(qerrCol).cast("long").as("__q"))

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
+import graft.util.Lineage
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -86,15 +87,13 @@ object Similarity {
     * Without the cut, `cents = recentered` re-nests the full
     * assign+recenter plan every iteration: analysis/optimization cost
     * balloons and lineage depth grows unboundedly — the wrong shape for
-    * the tens-of-iterations IVF build this is documented as. Set
-    * `reliableCheckpoint = true` on a real cluster (localCheckpoint dies
-    * with an executor; k-row checkpoints are cheap either way). */
+    * the tens-of-iterations IVF build this is documented as. Set a
+    * checkpoint dir on a real cluster so the cuts are reliable (local
+    * checkpoints die with an executor; k-row checkpoints are cheap either
+    * way). */
   def kmeansCentroids(embeddings: DataFrame, embCol: String, idCol: String,
-                      k: Int, iters: Int,
-                      reliableCheckpoint: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
-    var cents = cut(embeddings.orderBy(F.col(idCol)).limit(k)
+                      k: Int, iters: Int): DataFrame = {
+    var cents = Lineage.cut(embeddings.orderBy(F.col(idCol)).limit(k)
       .select(F.col(idCol).as("cell"),
         F.transform(F.col(embCol), x => x.cast("double")).as("cvec")))
     var i = 0
@@ -111,7 +110,7 @@ object Similarity {
         .select(F.col("cell"),
           F.transform(F.col("pairs"), p => p.getField("mean")).as("cvec"))
       val prev = cents
-      cents = cut(recentered)
+      cents = Lineage.cut(recentered)
       // the new cut is materialized (eager): the previous iteration's
       // cached blocks are dead — release them
       prev.unpersist(blocking = false)
@@ -143,10 +142,8 @@ object Similarity {
     * assignment (the cell doubles as the storage partition key) → probe. */
   def annSearch(embeddings: DataFrame, embCol: String, idCol: String,
                 k: Int, nCells: Int, kmeansIters: Int,
-                query: Seq[Double], nProbe: Int,
-                reliableCheckpoint: Boolean = false): DataFrame = {
-    val cents = kmeansCentroids(embeddings, embCol, idCol, nCells, kmeansIters,
-      reliableCheckpoint)
+                query: Seq[Double], nProbe: Int): DataFrame = {
+    val cents = kmeansCentroids(embeddings, embCol, idCol, nCells, kmeansIters)
     val assigned = ivfAssign(embeddings, embCol, idCol, cents, "cell", "cvec")
       .select(F.col(idCol), F.col("cell"))
       .join(embeddings.select(F.col(idCol), F.col(embCol)), idCol)
@@ -649,12 +646,11 @@ object Similarity {
     // eager checkpoint paid a separate blocking job before the broadcast
     // build could start; the lazy cut materializes inside the broadcast
     // build itself (same single stats computation, one fewer job barrier)
-    val model = stats
+    val model = Lineage.cut(stats
       .agg(F.sort_array(F.collect_list(
         F.struct(F.col("pos"), F.col("med_ppm2"), F.col("mad_ppm4")))).as("__s"))
       .select(F.expr("transform(__s, x -> x.med_ppm2)").as("__med2"),
-        F.expr("transform(__s, x -> x.mad_ppm4)").as("__mad4"))
-      .localCheckpoint(false)
+        F.expr("transform(__s, x -> x.mad_ppm4)").as("__mad4")), eager = false)
     val scored = df.where(F.col(embCol).isNotNull)
       .select(F.col(idCol), F.col(embCol).as("__e"))
       .crossJoin(F.broadcast(model))
@@ -739,12 +735,9 @@ object Similarity {
   def semDedup(embeddings: DataFrame, idCol: String, embCol: String,
                centroids: DataFrame, centIdCol: String, centVecCol: String,
                threshold: Double,
-               reliableCheckpoint: Boolean = false,
                maxCellSize: Int = 100000): DataFrame = {
     import graft.plans.Expressions.dotProd
     Dedup.registerDropWarnListener(embeddings.sparkSession)
-    def cut(d: DataFrame): DataFrame =
-      if (reliableCheckpoint) d.checkpoint(true) else d.localCheckpoint(true)
     // Scan-parallelism guard: the N×k assignment join runs INSIDE the scan
     // stage (broadcast centroids — no shuffle below it), so input splits
     // are its ONLY parallelism. Embedding parquet compresses hard (64
@@ -762,8 +755,8 @@ object Similarity {
     // the assignment frame feeds BOTH pair sides and the kept output —
     // cut it once so the broadcast-assign pass runs once, not three times
     // (on a real cluster this is the "write the corpus partitioned by
-    // cell" materialization; set reliableCheckpoint there)
-    val assigned = cut(
+    // cell" materialization; set a checkpoint dir there)
+    val assigned = Lineage.cut(
       ivfAssign(emb0, embCol, idCol, centroids, centIdCol, centVecCol)
         .select(F.col(idCol), F.col("cell"))
         .join(embeddings.select(F.col(idCol), F.col(embCol)), Seq(idCol))
@@ -834,10 +827,9 @@ object Similarity {
     * flagged for plain `x * 1000000L`. */
   def ivfCellBalance(embeddings: DataFrame, embCol: String, idCol: String,
       centroids: DataFrame, centIdCol: String, centVecCol: String): DataFrame = {
-    val counts = ivfAssign(embeddings, embCol, idCol,
+    val counts = Lineage.cut(ivfAssign(embeddings, embCol, idCol,
         centroids, centIdCol, centVecCol)
-      .groupBy("cell").agg(F.count(F.lit(1)).as("n_vecs"))
-      .localCheckpoint(true)
+      .groupBy("cell").agg(F.count(F.lit(1)).as("n_vecs")))
     val total = counts.agg(F.sum("n_vecs").as("__t"))
     counts.crossJoin(F.broadcast(total))
       .select(F.col("cell"), F.col("n_vecs"),

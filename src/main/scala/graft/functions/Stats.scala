@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.Window
+import graft.util.Lineage
 
 /** Distributed statistics with cross-engine-deterministic arithmetic.
   *
@@ -81,13 +82,12 @@ object Stats {
         .groupBy(catCol).agg(F.count(F.lit(1)).as(out))
     val ca = counts(a, "n_a")
     val cb = counts(b, "n_b")
-    val joined = ca.join(cb, Seq(catCol), "full_outer")
+    // category-cardinality frame read by TWO consumers (totals + output):
+    // cut it once so the corpus count scans run once, not twice
+    val joined = Lineage.cut(ca.join(cb, Seq(catCol), "full_outer")
       .select(F.col(catCol),
         F.coalesce(F.col("n_a"), F.lit(0L)).as("n_a"),
-        F.coalesce(F.col("n_b"), F.lit(0L)).as("n_b"))
-      // category-cardinality frame read by TWO consumers (totals + output):
-      // cut it once so the corpus count scans run once, not twice
-      .localCheckpoint(true)
+        F.coalesce(F.col("n_b"), F.lit(0L)).as("n_b")))
     val k = F.count(F.lit(1))           // distinct categories (union)
     val totals = joined.agg(
       F.sum("n_a").as("__ta"), F.sum("n_b").as("__tb"), k.as("__k"))
@@ -124,14 +124,13 @@ object Stats {
                       k: Int = 5): DataFrame = {
     require(quasiCols.nonEmpty, "no quasi-identifier columns given")
     require(k >= 2, s"k must be >= 2, got $k")
-    val classes = df
+    val classes = Lineage.cut(df
       .groupBy(quasiCols.map(F.col): _*)
       .agg(F.count(F.lit(1)).as("__cnt"))
       .select(F.least(F.col("__cnt"), F.lit(k.toLong)).as("size_class"),
         F.col("__cnt"))
       .groupBy("size_class")
-      .agg(F.count(F.lit(1)).as("n_groups"), F.sum("__cnt").as("n_rows"))
-      .localCheckpoint()
+      .agg(F.count(F.lit(1)).as("n_groups"), F.sum("__cnt").as("n_rows")))
     val totals = classes.agg(F.sum("n_rows").as("__tot"))
     classes.crossJoin(F.broadcast(totals))
       .withColumn("rows_ppm", F.expr(
@@ -164,14 +163,13 @@ object Stats {
     val collapsed = df
       .groupBy((quasiCols :+ sensitiveCol).map(F.col): _*)
       .agg(F.count(F.lit(1)).as("__cnt"))
-    val classes = collapsed
+    val classes = Lineage.cut(collapsed
       .groupBy(quasiCols.map(F.col): _*)
       .agg(F.count(F.lit(1)).as("__ndv"), F.sum("__cnt").as("__rows"))
       .select(F.least(F.col("__ndv"), F.lit(l.toLong)).as("diversity_class"),
         F.col("__rows"))
       .groupBy("diversity_class")
-      .agg(F.count(F.lit(1)).as("n_groups"), F.sum("__rows").as("n_rows"))
-      .localCheckpoint()
+      .agg(F.count(F.lit(1)).as("n_groups"), F.sum("__rows").as("n_rows")))
     val totals = classes.agg(F.sum("n_rows").as("__tot"))
     classes.crossJoin(F.broadcast(totals))
       .withColumn("rows_ppm", F.expr(
@@ -213,10 +211,10 @@ object Stats {
     require(bandsPpm.nonEmpty && bandsPpm == bandsPpm.sorted &&
       bandsPpm.forall(b => b >= 0L && b <= 1000000L),
       s"bands must be ascending ppm in [0, 1000000], got $bandsPpm")
-    val gs = df
+    // marginals + the fold all derive from this
+    val gs = Lineage.cut(df
       .groupBy((quasiCols :+ sensitiveCol).map(F.col): _*)
-      .agg(F.count(F.lit(1)).as("__cgs"))
-      .localCheckpoint() // marginals + the fold all derive from this
+      .agg(F.count(F.lit(1)).as("__cgs")))
     // marginal joins are null-safe: an equi-join on the raw columns would
     // silently drop NULL-quasi groups and shunt NULL-sensitive mass into
     // the absent term, contradicting the trio's NULL-is-a-value contract
@@ -244,14 +242,13 @@ object Stats {
                  CAST(__ng AS DECIMAL(38,0)) * (__n - __cs_present)) * 1000000
                DIV (2 * CAST(__ng AS DECIMAL(38,0)) * __n) AS BIGINT)"""))
     val bArr = bandsPpm.mkString("array(", "L, ", "L)")
-    val classes = perGroup
+    val classes = Lineage.cut(perGroup
       .select(F.expr(
           s"CAST(size(filter($bArr, b -> b < tv_ppm)) AS BIGINT)").as("band"),
         F.col("__ng"), F.col("tv_ppm"))
       .groupBy("band")
       .agg(F.count(F.lit(1)).as("n_groups"), F.sum("__ng").as("n_rows"),
-        F.max("tv_ppm").as("max_tv_ppm"))
-      .localCheckpoint()
+        F.max("tv_ppm").as("max_tv_ppm")))
     val totals = classes.agg(F.sum("n_rows").as("__tot"))
     classes.crossJoin(F.broadcast(totals))
       .withColumn("rows_ppm", F.expr(
@@ -840,7 +837,7 @@ object Stats {
     type AuditRow = (String, String, Option[Long], Long, Long, Long,
       Long, Long, Option[Long])
     val rows: Seq[AuditRow] = if (baseUsable) {
-      val base = basePlan.coalesce(4).localCheckpoint()
+      val base = Lineage.cut(basePlan.coalesce(4))
       // one grouping-sets aggregate over the cell table: every pair's
       // (a,b) joint plus both marginals, () for the global total, and the
       // FULL tuple (the cell count that verifies an assumeUnderCap
@@ -849,11 +846,11 @@ object Stats {
         (pairs.flatMap { case (a, b) =>
           Seq(Seq(a, b).distinct, Seq(a), Seq(b)) } ++
           Seq(Seq.empty[String], allCols)).distinct
-      val gs = base.groupingSets(
+      val gs = Lineage.cut(base.groupingSets(
           sets.map(_.map(c => F.col(s"__k_$c"))),
           allCols.map(c => F.col(s"__k_$c")): _*)
         .agg(F.sum("__n").as("__c"), F.grouping_id().as("__gid"))
-        .coalesce(1).localCheckpoint()
+        .coalesce(1))
       // grouping_id bitmask: bit set = column AGGREGATED AWAY (not in set)
       def gidOf(set: Seq[String]): Long =
         allCols.zipWithIndex.foldLeft(0L) { case (g, (c, i)) =>
@@ -935,11 +932,10 @@ object Stats {
       // per-pair corpus fallback (jointly high-NDV audited columns): one
       // scan per pair, the cap enforced on the pair's own joint before
       // any marginal join runs on it
-      val joint = df
+      val joint = Lineage.cut(df
         .select(F.coalesce(F.col(a).cast("string"), F.lit("\u0002")).as("__a"),
           F.coalesce(F.col(b).cast("string"), F.lit("\u0002")).as("__b"))
-        .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c"))
-        .localCheckpoint()
+        .groupBy("__a", "__b").agg(F.count(F.lit(1)).as("__c")))
       val cells = joint.count()
       require(cells <= maxJointCells,
         s"dependencyAudit: pair ($a, $b) has $cells joint cells > cap " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
+import graft.util.Lineage
 
 /** Temporal operators for event streams, designed for the 100 TB regime.
   *
@@ -414,9 +415,8 @@ object Temporal {
         F.col(tsCol).cast("long").as("__ts"))
       .withColumn("__late", F.max("__ts").over(w) - F.col("__ts"))
       .select(F.expr(bandExpr).as("band"), F.col("__late"))
-    val byBand = late.groupBy("band")
-      .agg(F.count(F.lit(1)).as("n_rows"), F.max("__late").as("max_late"))
-      .localCheckpoint()
+    val byBand = Lineage.cut(late.groupBy("band")
+      .agg(F.count(F.lit(1)).as("n_rows"), F.max("__late").as("max_late")))
     val totals = byBand.agg(F.sum("n_rows").as("__tot"))
     byBand.crossJoin(F.broadcast(totals))
       .withColumn("rows_ppm", F.expr(

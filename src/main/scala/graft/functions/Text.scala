@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.{functions => F}
+import graft.util.Lineage
 
 /** Text-analysis operators for large-scale training-data pipelines.
   *
@@ -457,12 +458,11 @@ object Text {
     // (4 passes — measured 1.35 s → 1.17 s at sf0.1; the remaining cost
     // is the gram-keyed probe joins, which are the operator). The
     // materialized frame is (id, tokens) ≈ corpus text size — at 100 TB
-    // swap the localCheckpoint for a persisted stage or accept the
+    // swap the cut for a persisted stage or accept the
     // re-scans (DSIR's trade at Sampling.scala:176 goes the other way
     // because ITS reuse frame is per-token, 3× larger than this one).
-    val base = df
-      .select(F.col(idCol), tokens(F.col(textCol)).as("__ts"))
-      .localCheckpoint()
+    val base = Lineage.cut(df
+      .select(F.col(idCol), tokens(F.col(textCol)).as("__ts")))
     val tri = base.select(F.col(idCol),
       F.explode(graft.plans.Expressions.shingleArray(F.col("__ts"), 3)).as("__tg"))
     val triC = tri.groupBy("__tg").agg(F.count(F.lit(1)).as("__c3"))
@@ -647,9 +647,9 @@ object Text {
       ranks: Seq[Long]): org.apache.spark.sql.DataFrame = {
     require(ranks.nonEmpty && ranks.forall(_ > 0), s"ranks must be positive: $ranks")
     val maxR = ranks.max.toInt
-    val counts = df.select(F.explode(tokens(F.col(textCol))).as("__w"))
-      .groupBy("__w").agg(F.count(F.lit(1)).as("__c"))
-      .localCheckpoint(true) // feeds the totals AND the top-k — count once
+    // feeds the totals AND the top-k — count once
+    val counts = Lineage.cut(df.select(F.explode(tokens(F.col(textCol))).as("__w"))
+      .groupBy("__w").agg(F.count(F.lit(1)).as("__c")))
     val totals = counts.agg(F.sum("__c").as("__tot"),
       F.count(F.lit(1)).as("n_terms"))
     val top = counts.orderBy(F.col("__c").desc, F.col("__w")).limit(maxR)
@@ -711,19 +711,19 @@ object Text {
     val tfAll = cnt.join(F.broadcast(totals), "__g")
       .select(F.col("__g"), F.col("__w"),
         F.expr("CAST(CAST(__c AS DECIMAL(38,0)) * 1000000 DIV __t AS BIGINT)").as("__f"))
-    val tf = (if (maxSourcesPerTerm == Int.MaxValue) tfAll
+    val tf = Lineage.cut(if (maxSourcesPerTerm == Int.MaxValue) tfAll
       else {
         // the per-term source count is a vocabulary-keyed aggregate with
         // map-side combine — cheap relative to the S² fan-out it prevents.
         // tfAll feeds both the count and the join: cut it once (the same
         // double-consumer discipline as the tf table below)
-        val tfCut = tfAll.localCheckpoint(true)
+        val tfCut = Lineage.cut(tfAll)
         val okTerms = tfCut.groupBy("__w")
           .agg(F.count(F.lit(1)).as("__ns"))
           .where(F.col("__ns") <= maxSourcesPerTerm)
           .select("__w")
         tfCut.join(okTerms, "__w").select("__g", "__w", "__f")
-      }).localCheckpoint(true)
+      })
     val norms = tf.groupBy("__g").agg(F.sum(F.expr("__f * __f")).as("__n2"))
     val dots = tf.select(F.col("__g").as("src_a"), F.col("__w"), F.col("__f").as("__fa"))
       .join(tf.select(F.col("__g").as("src_b"), F.col("__w"), F.col("__f").as("__fb")),
@@ -905,9 +905,8 @@ object Text {
   def gateFunnel(df: org.apache.spark.sql.DataFrame,
       gates: Seq[(String, Column)]): org.apache.spark.sql.DataFrame = {
     require(gates.nonEmpty, "gateFunnel needs at least one gate")
-    val dropped = df.select(firstFailGate(gates).cast("long").as("__ff"))
-      .groupBy("__ff").agg(F.count(F.lit(1)).as("__d"))
-      .localCheckpoint(true)
+    val dropped = Lineage.cut(df.select(firstFailGate(gates).cast("long").as("__ff"))
+      .groupBy("__ff").agg(F.count(F.lit(1)).as("__d")))
     val total = dropped.agg(F.coalesce(F.sum("__d"), F.lit(0L)).as("__n"))
     val s = df.sparkSession
     import s.implicits._
@@ -973,10 +972,9 @@ object Text {
   def budgetProjection(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, groupCol: String,
       quantile: Double): org.apache.spark.sql.DataFrame = {
-    val scored = classifierScore(df, idCol, textCol)
+    val scored = Lineage.cut(classifierScore(df, idCol, textCol)
       .join(df.select(F.col(idCol), F.col(groupCol)), Seq(idCol))
-      .select(F.col(groupCol), F.col("score_milli"), F.col("n_tokens"))
-      .localCheckpoint(true)
+      .select(F.col(groupCol), F.col("score_milli"), F.col("n_tokens")))
     val thr = scored.groupBy(groupCol).agg(
       F.count(F.lit(1)).as("n_docs"),
       F.expr(s"percentile(score_milli, $quantile)").as("__thr"))
@@ -1030,7 +1028,7 @@ object Text {
     val cnt = if (maxSourcesPerTerm == Int.MaxValue) cnt0
       else {
         // cnt0 feeds both the per-term count and the join — cut it once
-        val cntCut = cnt0.localCheckpoint(true)
+        val cntCut = Lineage.cut(cnt0)
         val okTerms = cntCut.groupBy("__w").agg(F.count(F.lit(1)).as("__ns"))
           .where(F.col("__ns") <= maxSourcesPerTerm).select("__w")
         cntCut.join(okTerms, "__w").select("__g", "__w", "__c")
@@ -1038,10 +1036,9 @@ object Text {
     // totals over the CAPPED vocabulary: masses and the shared sum must
     // see the same distribution or tv(a,a) drifts off zero
     val totals = cnt.groupBy("__g").agg(F.sum("__c").as("__t"))
-    val ppm = cnt.join(F.broadcast(totals), "__g")
+    val ppm = Lineage.cut(cnt.join(F.broadcast(totals), "__g")
       .select(F.col("__g"), F.col("__w"),
-        F.expr("CAST(CAST(__c AS DECIMAL(38,0)) * 1000000 DIV __t AS BIGINT)").as("__p"))
-      .localCheckpoint(true)
+        F.expr("CAST(CAST(__c AS DECIMAL(38,0)) * 1000000 DIV __t AS BIGINT)").as("__p")))
     val mass = ppm.groupBy("__g").agg(F.sum("__p").as("__m"))
     val shared = ppm.select(F.col("__g").as("src_a"), F.col("__w"), F.col("__p").as("__pa"))
       .join(ppm.select(F.col("__g").as("src_b"), F.col("__w"), F.col("__p").as("__pb")),
@@ -1153,10 +1150,9 @@ object Text {
     val occ = df.select(bucket.as("batch"), tokenCount(F.col(textCol)).as("__c"))
       .groupBy("batch").agg(F.sum(F.col("__c").cast("long")).as("batch_tokens"))
     val base = df.sparkSession.range(batches).select(F.col("id").as("batch"))
-    val joined = base
+    val joined = Lineage.cut(base
       .join(perBatch, Seq("batch"), "left").na.fill(0L, Seq("new_tokens"))
-      .join(occ, Seq("batch"), "left").na.fill(0L, Seq("batch_tokens"))
-      .localCheckpoint()
+      .join(occ, Seq("batch"), "left").na.fill(0L, Seq("batch_tokens")))
     val rhs = joined.select(F.col("batch").as("__b2"),
       F.col("new_tokens").as("__nt2"))
     val totals = joined.agg(F.sum("new_tokens").as("__tv"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import scala.collection.mutable
+import graft.util.Lineage
 
 /** Streaming INCREMENTAL duplicate clusters: the continuous-ingest face of
   * [[graft.functions.Dedup.duplicateClusters]]. Candidate pairs arrive per
@@ -519,7 +520,7 @@ object IncrementalClusters {
         .cast("long").as("id"),
       F.regexp_extract(F.col("v"), "^\\[(-?\\d+)\\]$", 1)
         .cast("long").as("parent"))
-    var cur = links.localCheckpoint()
+    var cur = Lineage.cut(links)
     var round = 0
     var anyChanged = true
     var liveCut = cur
@@ -530,7 +531,7 @@ object IncrementalClusters {
       val next = cur.join(hop, F.col("parent") === F.col("__pid"))
         .select(F.col("id"), F.col("__gp").as("parent"),
           (F.col("__gp") =!= F.col("parent")).as("__chg"))
-      val cutNext = next.localCheckpoint()
+      val cutNext = Lineage.cut(next)
       anyChanged = !cutNext.where(F.col("__chg")).isEmpty
       cur = cutNext.drop("__chg")
       liveCut.unpersist(blocking = false)

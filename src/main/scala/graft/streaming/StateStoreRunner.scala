@@ -43,6 +43,11 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   */
 object StateStoreRunner {
 
+  /** Lowercase hex md5 of `s`'s UTF-8 bytes. `md` is the caller's own
+    * digest, one per batch call: a `MessageDigest` is not thread-safe. */
+  private def md5hex(md: java.security.MessageDigest, s: String): String =
+    md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   /** CombinerAggregator fold per key, typed state: state ←
     * combine(state, init(row)) (reference `MapCombinerAggStateUpdater`
     * semantics, any value type).
@@ -198,10 +203,8 @@ object StateStoreRunner {
     override def handleInputRows(key: String, rows: Iterator[(String, String)],
                                  timerValues: TimerValues): Iterator[(String, Long, Long, Long)] = {
       val md = java.security.MessageDigest.getInstance("MD5")
-      def md5hex(s: String): String =
-        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val cur = if (minima.exists()) minima.get().toVector else Vector.empty[String]
-      val merged = (cur ++ rows.map(r => md5hex(r._2))).distinct.sorted.take(k)
+      val merged = (cur ++ rows.map(r => md5hex(md, r._2))).distinct.sorted.take(k)
       // ListState TTL is PER ELEMENT, not per key: a saturated sketch on
       // an actively-arriving key would silently expire under a
       // changed-only write-back (merged == cur skips the put, so nothing
@@ -270,12 +273,10 @@ object StateStoreRunner {
     override def handleInputRows(key: String, rows: Iterator[(String, String, Long)],
                                  timerValues: TimerValues): Iterator[(String, Long, Long, Long)] = {
       val md = java.security.MessageDigest.getInstance("MD5")
-      def md5hex(s: String): String =
-        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val cur = if (samp.exists()) samp.get().toVector else Vector.empty[(String, Long)]
       // (hash, value) pair order — the batch face's deterministic
       // collision tie-break (identical pairs collapse via distinct)
-      val merged = (cur ++ rows.map(r => (md5hex(r._2), r._3)))
+      val merged = (cur ++ rows.map(r => (md5hex(md, r._2), r._3)))
         .distinct.sorted.take(k)
       samp.put(merged.toArray)
       val vs = merged.map(_._2).sorted
@@ -309,10 +310,8 @@ object StateStoreRunner {
     override def handleInputRows(key: String, rows: Iterator[(String, String, Long)],
                                  timerValues: TimerValues): Iterator[(String, Long, Long, Long)] = {
       val md = java.security.MessageDigest.getInstance("MD5")
-      def md5hex(s: String): String =
-        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val cur = if (samp.exists()) samp.get().toVector else Vector.empty[(String, Long)]
-      val merged = (cur ++ rows.map(r => (md5hex(r._2), r._3)))
+      val merged = (cur ++ rows.map(r => (md5hex(md, r._2), r._3)))
         .distinct.sorted.take(k)
       samp.put(merged.toArray)
       val vs = merged.map(_._2).sorted
@@ -350,10 +349,8 @@ object StateStoreRunner {
     override def handleInputRows(key: String, rows: Iterator[(String, String, Long)],
                                  timerValues: TimerValues): Iterator[(String, Long, Long, Long)] = {
       val md = java.security.MessageDigest.getInstance("MD5")
-      def md5hex(s: String): String =
-        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
       val cur = if (samp.exists()) samp.get().toVector else Vector.empty[(String, Long)]
-      val merged = (cur ++ rows.map(r => (md5hex(r._2), r._3)))
+      val merged = (cur ++ rows.map(r => (md5hex(md, r._2), r._3)))
         .distinct.sorted.take(k)
       samp.put(merged.toArray)
       val vs = merged.map(_._2).sorted
@@ -617,10 +614,9 @@ object StateStoreRunner {
       val idx = (if (rel.exists()) rel.get() else 0L) + 1L
       st.update(tot)
       rel.update(idx)
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$key\u0001$seed:$idx".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString
-      val u = java.lang.Long.parseLong(md.take(15), 16)
+      val hex = md5hex(java.security.MessageDigest.getInstance("MD5"),
+        s"$key\u0001$seed:$idx")
+      val u = java.lang.Long.parseLong(hex.take(15), 16)
       var below = 0
       var i = 0
       while (i < thresholds.length) { if (thresholds(i) <= u) below += 1; i += 1 }
@@ -678,8 +674,7 @@ object StateStoreRunner {
       val md5 = java.security.MessageDigest.getInstance("MD5")
       (0L until numBins.toLong).iterator.map { b =>
         val n = if (bins.containsKey(b)) bins.getValue(b) else 0L
-        val hex = md5.digest(s"$key\u0001$b\u0001$seed:$idx:hist".getBytes("UTF-8"))
-          .map(x => f"$x%02x").mkString
+        val hex = md5hex(md5, s"$key\u0001$b\u0001$seed:$idx:hist")
         val u = java.lang.Long.parseLong(hex.take(15), 16)
         var below = 0
         var i = 0

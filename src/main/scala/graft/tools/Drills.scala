@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.util.Lineage
 
 /** Shared bench/tuning drills — ONE spelling of the state-store word-count
   * drive, used by both the recorded bench entry
@@ -96,9 +97,8 @@ object Drills {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val banded = graft.functions.Dedup.lshBands(
       graft.functions.Dedup.minhashSignature(docs, "text", 3, 4), 4, 2)
-    val pairs = graft.functions.Dedup.lshCandidatePairs(banded, "doc_id", 2)
-      .select(F.col("a").cast("long").as("a"), F.col("b").cast("long").as("b"))
-      .localCheckpoint(true)
+    val pairs = Lineage.cut(graft.functions.Dedup.lshCandidatePairs(banded, "doc_id", 2)
+      .select(F.col("a").cast("long").as("a"), F.col("b").cast("long").as("b")))
     val nPairs = pairs.count()
     val id = s"bench-dupc-${System.nanoTime()}"
     graft.streaming.IncrementalClusters.clearInMemory(id)
@@ -374,11 +374,10 @@ object Drills {
       F.length(F.col("text")).cast("double").as("q"))
     val banded = graft.functions.Dedup.lshBands(
       graft.functions.Dedup.minhashSignature(docs, "text", 3, 4), 4, 2)
-    val pairs = graft.functions.Dedup.lshCandidatePairs(banded, "doc_id", 2)
+    val pairs = Lineage.cut(graft.functions.Dedup.lshCandidatePairs(banded, "doc_id", 2)
       .select(F.col("a").cast("long").as("a"), F.col("b").cast("long").as("b"))
       .join(quality.withColumnRenamed("id", "a").withColumnRenamed("q", "qa"), Seq("a"))
-      .join(quality.withColumnRenamed("id", "b").withColumnRenamed("q", "qb"), Seq("b"))
-      .localCheckpoint(true)
+      .join(quality.withColumnRenamed("id", "b").withColumnRenamed("q", "qb"), Seq("b")))
     val nPairs = pairs.count()
     val id = s"bench-dupcq-${System.nanoTime()}"
     graft.streaming.IncrementalClusters.clearInMemory(id)

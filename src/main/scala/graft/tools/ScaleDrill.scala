@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
 import graft.functions.{Dedup, Eval, Multimodal, Sampling, Scale, Similarity, Temporal, Text}
+import graft.util.Lineage
 
 /** Measured scale curve for the dedup/LSH pipelines (SCALE.md's recipe):
   * replicate the sf0.1 documents table N× and time the q36/q60/q74/q85
@@ -448,9 +449,8 @@ object ScaleDrill {
       val inc = graft.streaming.IncrementalClusters.inMemory(id)
       val banded = graft.functions.Dedup.lshBands(
         graft.functions.Dedup.minhashSignature(docs, "text", 3, 4), 4, 2)
-      val pairs = graft.functions.Dedup.lshCandidatePairs(banded, "doc_id", 2)
-        .select(F.col("a").cast("long").as("a"), F.col("b").cast("long").as("b"))
-        .localCheckpoint(true)
+      val pairs = Lineage.cut(graft.functions.Dedup.lshCandidatePairs(banded, "doc_id", 2)
+        .select(F.col("a").cast("long").as("a"), F.col("b").cast("long").as("b")))
       (0 until 4).foreach { i =>
         inc.applyBatch(pairs.where(F.pmod(F.xxhash64(F.col("a"), F.col("b")),
           F.lit(4L)) === i.toLong), "a", "b", i.toLong).count()
@@ -1457,11 +1457,11 @@ object ScaleDrill {
       val bg = spark.range(100000L).select(
         (F.col("id") * 2L + bgBase).as("a"),
         (F.col("id") * 2L + bgBase + 1L).as("b"))
-      val pairs = star.unionByName(bg).localCheckpoint(true)
+      val pairs = Lineage.cut(star.unionByName(bg))
       val t0 = System.nanoTime()
       // cut the labels once: countDistinct and the hot-member count are two
       // actions and would otherwise re-run the whole propagation each
-      val labels = Dedup.duplicateClusters(pairs, "a", "b").localCheckpoint(true)
+      val labels = Lineage.cut(Dedup.duplicateClusters(pairs, "a", "b"))
       val nClusters = labels.select(F.countDistinct("cluster_id")).head().getLong(0)
       val nHot = labels.where(F.col("cluster_id") === hub).count()
       val sec = (System.nanoTime() - t0) / 1e9
@@ -1514,8 +1514,8 @@ object ScaleDrill {
       System.gc()
       val heapAfter = rt.totalMemory() - rt.freeMemory()
       // parity pass reuses one materialization across both excepts
-      val dist = graft.streaming.IncrementalClusters
-        .snapshotDistributedDisk(spark, dir).localCheckpoint(true)
+      val dist = Lineage.cut(graft.streaming.IncrementalClusters
+        .snapshotDistributedDisk(spark, dir))
       // expected labels: every id labels to its group base
       import org.apache.spark.sql.{functions => FF}
       val expect = spark.range(keys.toLong)

@@ -1,0 +1,24 @@
+package graft.util
+
+import org.apache.spark.sql.Dataset
+
+/** The one place a Dataset's lineage is cut. Every operator that reuses a
+  * frame across subplans, or iterates on one, materializes it here instead
+  * of calling `localCheckpoint`/`checkpoint` itself, so the local-vs-reliable
+  * choice is made once, from state the deployment already has:
+  *
+  *  - no checkpoint dir on the SparkContext (neither `setCheckpointDir` nor
+  *    the `spark.checkpoint.dir` conf): `localCheckpoint(eager)`. Blocks live
+  *    in executor storage and die with their executor; each call site keeps
+  *    its own eager/lazy choice.
+  *  - a checkpoint dir set: an EAGER reliable `checkpoint`, written to the
+  *    dir and recoverable after executor loss. Always eager, because a lazy
+  *    reliable checkpoint writes in a second job after the first action and
+  *    so evaluates the lineage twice; the eager one computes and writes in
+  *    one job.
+  */
+object Lineage {
+  def cut[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isEmpty) ds.localCheckpoint(eager)
+    else ds.checkpoint(eager = true)
+}

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions._
+import scala.jdk.CollectionConverters._
 
 /** Extension-operator tests: text analysis, dedup, similarity, multimodal
   * plumbing — deterministic micro-fixtures with hand-checked expectations. */
@@ -1373,45 +1374,88 @@ class FunctionsSpec extends AnyFunSuite {
     assert(kept == Set(2L, 4L))
   }
 
-  test("reliableCheckpoint spelling is result-identical on every lazy-cut site (VERDICT r16 #6)") {
-    // the three r16 lazy cuts + the r17 ones (maskEvalSpans toks,
-    // copyRepairPlan row hashes) must produce the same rows under the
-    // HDFS-backed reliable spelling as under localCheckpoint
+  /** Runs `body` with a fresh checkpoint dir set on the shared context, then
+    * unsets it and deletes the dir, so no later test sees reliable cuts. */
+  private def withCheckpointDir[A](body: java.nio.file.Path => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
     spark.sparkContext.setCheckpointDir(dir.toString)
-    val docs = Seq(
-      (1L, "a b c d e f g"), (2L, "a b c d e f h"),
-      (3L, "x y z w v u t"), (4L, "x y z w v u t"),
-      (5L, "p q r s a b c d e f g p q r s"))
-      .toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(rows(Dedup.nearDupPairs(docs, "doc_id", "text", k = 3,
-        numHashes = 4, rowsPerBand = 2, threshold = 0.05,
-        reliableCheckpoint = true)) ==
-      rows(Dedup.nearDupPairs(docs, "doc_id", "text", k = 3,
-        numHashes = 4, rowsPerBand = 2, threshold = 0.05)))
-    assert(rows(Dedup.maskDuplicatedSpans(docs, "doc_id", "text", n = 3,
-        minCount = 2L, reliableCheckpoint = true)) ==
-      rows(Dedup.maskDuplicatedSpans(docs, "doc_id", "text", n = 3,
-        minCount = 2L)))
-    assert(rows(Dedup.maskEvalSpans(docs, "doc_id", "text",
-        docs.where($"doc_id" === 5L), "text", n = 3,
-        reliableCheckpoint = true)) ==
-      rows(Dedup.maskEvalSpans(docs, "doc_id", "text",
-        docs.where($"doc_id" === 5L), "text", n = 3)))
+    try body(dir)
+    finally {
+      org.apache.spark.CheckpointDirShim.clear(spark.sparkContext)
+      graft.util.Fs.deleteRecursively(dir)
+    }
+  }
+
+  private val cutDocs = Seq(
+    (1L, "a b c d e f g"), (2L, "a b c d e f h"),
+    (3L, "x y z w v u t"), (4L, "x y z w v u t"),
+    (5L, "p q r s a b c d e f g p q r s"))
+
+  test("a checkpoint dir turns the lineage cuts reliable with result-identical rows") {
+    // each function runs once with local cuts (no dir) and once with
+    // reliable cuts (dir set); the lazy-cut sites are covered, and so is
+    // dropNearDups, which composes nearDupPairs with duplicateClusters
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "a checkpoint dir leaked onto the shared context")
+    val docs = cutDocs.toDF("doc_id", "text")
     val big = (1L to 50L).map(i => (i, i % 7L)).toDF("k", "v")
     val small = Seq(0L, 1L, 2L).toDF("sk")
-    assert(rows(Scale.bloomSemiJoin(big, small, "k", "sk",
-        reliableCheckpoint = true)) ==
-      rows(Scale.bloomSemiJoin(big, small, "k", "sk")))
     val src = (1L to 40L).map(i => (i, s"p$i")).toDF("id", "s")
     val copy = (1L to 40L).filter(_ != 11L).map(i =>
       (i, if (i == 13L) "X" else s"p$i")).toDF("id", "s")
-    assert(rows(Scale.copyRepairPlan(src, copy, "id", Seq("id", "s"),
-        shards = 4, cutRowHashes = true, reliableCheckpoint = true)) ==
-      rows(Scale.copyRepairPlan(src, copy, "id", Seq("id", "s"),
-        shards = 4)))
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "nearDupPairs" -> (() => Dedup.nearDupPairs(docs, "doc_id", "text",
+        k = 3, numHashes = 4, rowsPerBand = 2, threshold = 0.05)),
+      "maskDuplicatedSpans" -> (() => Dedup.maskDuplicatedSpans(docs,
+        "doc_id", "text", n = 3, minCount = 2L)),
+      "maskEvalSpans" -> (() => Dedup.maskEvalSpans(docs, "doc_id", "text",
+        docs.where($"doc_id" === 5L), "text", n = 3)),
+      "bloomSemiJoin" -> (() => Scale.bloomSemiJoin(big, small, "k", "sk")),
+      "copyRepairPlan" -> (() => Scale.copyRepairPlan(src, copy, "id",
+        Seq("id", "s"), shards = 4, cutRowHashes = true)),
+      "dropNearDups" -> (() => Dedup.dropNearDups(docs, "doc_id", "text",
+        k = 3, numHashes = 4, rowsPerBand = 2, threshold = 0.05)))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    val local = cases.map { case (name, run) => name -> rows(run()) }
+    val reliable = withCheckpointDir { dir =>
+      val out = cases.map { case (name, run) => name -> rows(run()) }
+      val written = java.nio.file.Files.walk(dir).iterator().asScala
+        .count(_.getFileName.toString.startsWith("rdd-"))
+      assert(written >= cases.size, s"only $written reliable checkpoints written")
+      out
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    local.zip(reliable).foreach { case ((name, l), (_, r)) =>
+      assert(l.nonEmpty, name)
+      assert(l == r, name)
+    }
+  }
+
+  test("a reliable lineage cut evaluates its input once") {
+    // the nearDupPairs signature cut is lazy when local. Reliable, it is
+    // eager: the input is read once while the frame is built, and the
+    // action reads the checkpoint instead of running the lineage again
+    // (a lazy reliable checkpoint writes in a second job that recomputes)
+    val evals = spark.sparkContext.longAccumulator("graft.spec.sigEvals")
+    val tap = F.udf((s: String) => { evals.add(1L); s }).asNondeterministic()
+    // an RDD-backed frame: over a local relation the optimizer would fold
+    // the tap at planning time instead of running it in a job
+    val docs = spark.sparkContext.parallelize(cutDocs, 2).toDF("doc_id", "text")
+      .select($"doc_id", tap($"text").as("text"))
+    def run(): (Long, Long) = {
+      evals.reset()
+      val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", k = 3,
+        numHashes = 4, rowsPerBand = 2, threshold = 0.05)
+      val atBuild = evals.sum
+      pairs.collect()
+      (atBuild, evals.sum)
+    }
+    val (localBuild, localTotal) = run()
+    val (reliableBuild, reliableTotal) = withCheckpointDir(_ => run())
+    assert(localBuild == 0L)
+    assert(reliableBuild == cutDocs.size.toLong)
+    assert(reliableTotal == localTotal)
   }
 
   test("keepBestOfClusters: NULL cluster labels pass through as unclustered (ADVICE r16)") {
