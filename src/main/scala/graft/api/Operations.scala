@@ -1,7 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, RowEncoder}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** User-operation SPI — the Spark-first re-expression of the reference's
   * per-tuple operation interfaces (the `storm/trident/operation` package).
@@ -67,18 +70,56 @@ object Operations {
 
   // ---- Aggregator SPI (reference storm/trident/operation/) ----
 
-  /** `CombinerAggregator.java:24-29` — associative with `zero`; enables
-    * map-side partial aggregation (Catalyst partial/final HashAggregate). */
+  /** `CombinerAggregator.java:24-29` — associative with `zero`, so it can
+    * run as a two-phase plan: partial combines, then one merge
+    * (`ChainedAggregatorDeclarer.java:99-112`). Both `Stream.aggregate` and
+    * `GroupedStream.aggregate` lower it through [[combinerColumn]] to a
+    * Catalyst aggregate function: a partial/final `ObjectHashAggregate`
+    * whose scan reads only the group keys and the `in` fields. `init` sees
+    * the `in` values in declaration order, nulls included. The accumulator
+    * is stored as `out.dataType` between the phases, so `T` must be a value
+    * of that type (an array accumulator comes back as an immutable `Seq`). */
   trait CombinerAggregator[T] extends Serializable {
     def init(tuple: Seq[Any]): T
     def combine(a: T, b: T): T
     def zero: T
   }
 
-  /** `ReducerAggregator.java:22-26` — a fold with no combine step. The
-    * reference routes these through `global()` so one task folds everything
-    * (`Stream.java:315-318`); our grouped adapter folds each key-group whole
-    * inside `flatMapGroups` so no merge is ever needed. */
+  /** The one adapter from the Combiner SPI to Catalyst: `agg` over the `in`
+    * columns of `df` as a typed `Aggregator`, named `out.name`. Its input is
+    * a `Row` of the `in` fields; its buffer and output are encoded as
+    * `out.dataType`. */
+  private[api] def combinerColumn[T](df: DataFrame, in: Fields, agg: CombinerAggregator[T],
+                                     out: StructField): Column = {
+    // a one-field row encoder holds that field's own encoder
+    val AgnosticEncoders.RowEncoder(Seq(field)) = RowEncoder.encoderFor(StructType(Seq(out)))
+    val enc = field.enc.asInstanceOf[Encoder[T]]
+    val inSchema = StructType(in.names.map(df.schema(_)))
+    udaf(new CombinerUdaf(agg, enc), Encoders.row(inSchema))(in.names.map(col): _*).as(out.name)
+  }
+
+  private final class CombinerUdaf[T](agg: CombinerAggregator[T], enc: Encoder[T])
+      extends Aggregator[Row, T, T] {
+    def zero: T = agg.zero
+    def reduce(acc: T, in: Row): T = agg.combine(acc, agg.init(in.toSeq))
+    // `b` is a partial decoded from the shuffle or a spill, which holds
+    // arrays as mutable.ArraySeq; `a` is always this task's own buffer
+    def merge(a: T, b: T): T = agg.combine(a, immutableArrays(b).asInstanceOf[T])
+    def finish(acc: T): T = acc
+    def bufferEncoder: Encoder[T] = enc
+    def outputEncoder: Encoder[T] = enc
+  }
+
+  private def immutableArrays(v: Any): Any = v match {
+    case a: scala.collection.mutable.ArraySeq[_] => a.iterator.map(immutableArrays).toVector
+    case x => x
+  }
+
+  /** `ReducerAggregator.java:22-26` — a fold with no combine step, so it
+    * has no partial phase. The reference routes these through `global()` so
+    * one task folds everything (`Stream.java:315-318`); the grouped adapter
+    * prunes the input to the keys and `in` fields, shuffles it by key and
+    * folds each key-group whole inside `flatMapGroups`. */
   trait ReducerAggregator[T] extends Serializable {
     def init(): T
     def reduce(acc: T, tuple: Seq[Any]): T
@@ -87,7 +128,10 @@ object Operations {
   /** `Aggregator.java:21-26` — arbitrary N→M aggregation: accumulate state
     * over a batch/group, then emit any number of output tuples. (The
     * reference additionally allows emission DURING accumulation; that only
-    * matters for infinite groups and is out of per-batch scope.) */
+    * matters for infinite groups and is out of per-batch scope.) N output
+    * rows cannot be merged, so there is no partial phase: the grouped form
+    * folds each key-group whole after a shuffle of the keys and `in` fields,
+    * and `partitionAggregate` folds each partition of the `in` fields. */
   trait FullAggregator[S] extends Serializable {
     def init(): S
     def aggregate(state: S, tuple: Seq[Any]): S

@@ -262,41 +262,26 @@ class Stream(val df: DataFrame) extends Serializable {
     new Stream(df.agg(aggs.head, aggs.tail: _*))
   }
 
-  /** Whole-stream aggregate via a user CombinerAggregator (SPI tier). */
+  /** Whole-stream aggregate via a user CombinerAggregator (SPI tier):
+    * `df.agg` over [[Operations.combinerColumn]], so Catalyst plans a
+    * partial `ObjectHashAggregate` per partition, one exchange to a single
+    * partition and a final merge, reading only the `in` columns. Empty input
+    * gives one row holding `zero`. */
   def aggregate[T](in: Fields, agg: CombinerAggregator[T], out: StructField): Stream = {
     validate(in)
-    val inIdx = in.names.map(df.columns.indexOf(_))
-    val enc = Encoders.row(StructType(Seq(out)))
-    val res = df.mapPartitions { it =>
-      // partial combine per partition — mirrors the reference's two-phase plan
-      var acc = agg.zero
-      var any = false
-      it.foreach { r => acc = agg.combine(acc, agg.init(inIdx.map(r.get))); any = true }
-      if (any) Iterator(Row(acc)) else Iterator.empty
-      // repartition(1), NOT coalesce(1): coalesce is a narrow dependency, so
-      // Spark would collapse the partial stage into the same single task and
-      // the per-partition combine above would never run in parallel. The
-      // real exchange keeps partials distributed and ships one row each —
-      // the reference's two-phase plan (ChainedAggregatorDeclarer.java:99-112).
-    }(enc).repartition(1).mapPartitions { it =>
-      var acc = agg.zero
-      it.foreach(r => acc = agg.combine(acc, r.get(0).asInstanceOf[T]))
-      Iterator(Row(acc))
-    }(enc)
-    new Stream(res)
+    new Stream(df.agg(Operations.combinerColumn(df, in, agg, out)))
   }
 
   /** Per-partition aggregate — `partitionAggregate` (Stream.java:148-156);
-    * output REPLACES the tuple (fresh fields, `AggregateProcessor`). */
+    * output REPLACES the tuple (fresh fields, `AggregateProcessor`). One
+    * `mapPartitions` over the `in` columns only; no shuffle, no merge. */
   def partitionAggregate[S](in: Fields, agg: FullAggregator[S], out: Seq[StructField]): Stream = {
     validate(in)
-    val inIdx = in.names.map(df.columns.indexOf(_))
-    val enc = Encoders.row(StructType(out))
-    val res = df.mapPartitions { it =>
+    val res = df.select(in.names.map(F.col): _*).mapPartitions { it =>
       var s = agg.init()
-      it.foreach(r => s = agg.aggregate(s, inIdx.map(r.get)))
+      it.foreach(r => s = agg.aggregate(s, r.toSeq))
       agg.complete(s).map(Row.fromSeq)
-    }(enc)
+    }(Encoders.row(StructType(out)))
     new Stream(res)
   }
 
@@ -539,42 +524,34 @@ class GroupedStream(df: DataFrame, val keys: Fields) extends Serializable {
     new Stream(df.groupBy(keys.names.map(F.col): _*).agg(aggs.head, aggs.tail: _*))
   }
 
-  /** SPI tier: CombinerAggregator per key. Folds each group whole inside
-    * `flatMapGroups` (arbitrary JVM state); the Column tier is the partial-agg
-    * fast path. */
+  /** SPI tier: CombinerAggregator per key — `groupBy(keys).agg` over
+    * [[Operations.combinerColumn]]: map-side partial combines, a shuffle of
+    * one buffer per key and partition, then a final merge, over a scan of
+    * the keys and `in` columns only. */
   def aggregate[T](in: Fields, agg: Operations.CombinerAggregator[T],
                    out: StructField): Stream =
-    foldGroups(in, out)(it => {
-      var acc = agg.zero
-      it.foreach(t => acc = agg.combine(acc, agg.init(t)))
-      acc
-    })
+    new Stream(df.groupBy(keys.names.map(F.col): _*)
+      .agg(Operations.combinerColumn(df, in, agg, out)))
 
   /** SPI tier: ReducerAggregator per key (fold; `MapReducerAggStateUpdater`
-    * shape). */
+    * shape). No combine step, so no partial phase: see [[foldGroups]]. */
   def aggregate[T](in: Fields, agg: Operations.ReducerAggregator[T],
                    out: StructField): Stream =
-    foldGroups(in, out)(it => {
+    foldGroups(in, Seq(out)) { it =>
       var acc = agg.init()
       it.foreach(t => acc = agg.reduce(acc, t))
-      acc
-    })
+      Iterator(Seq(acc))
+    }
 
-  /** SPI tier: full Aggregator per key — N→M (`GroupedAggregator.java`). */
+  /** SPI tier: full Aggregator per key — N→M (`GroupedAggregator.java`).
+    * N output rows cannot merge, so no partial phase: see [[foldGroups]]. */
   def aggregate[S](in: Fields, agg: Operations.FullAggregator[S],
-                   out: Seq[StructField]): Stream = {
-    val (keyEnc, keySchema, inIdx) = prep(in)
-    val outSchema = StructType(keySchema.fields ++ out)
-    val outEnc = Encoders.row(outSchema)
-    val ki = keyIdx
-    val res = df.groupByKey(r => Row.fromSeq(ki.map(r.get)))(keyEnc)
-      .flatMapGroups { (key: Row, it: Iterator[Row]) =>
-        var s = agg.init()
-        it.foreach(r => s = agg.aggregate(s, inIdx.map(r.get)))
-        agg.complete(s).map(em => Row.fromSeq(key.toSeq ++ em))
-      }(outEnc)
-    new Stream(res)
-  }
+                   out: Seq[StructField]): Stream =
+    foldGroups(in, out) { it =>
+      var s = agg.init()
+      it.foreach(t => s = agg.aggregate(s, t))
+      agg.complete(s)
+    }
 
   /** Per-group top-N (FirstN applied per key) — planned through the native
     * [[graft.plans.TopK]] operator: per-partition bounded heaps partial-
@@ -602,25 +579,19 @@ class GroupedStream(df: DataFrame, val keys: Fields) extends Serializable {
 
   def toStream: Stream = new Stream(df)
 
-  private def keyIdx: Seq[Int] = keys.names.map(df.columns.indexOf(_))
-
-  private def prep(in: Fields) = {
-    val keySchema = StructType(keys.names.map(n => df.schema(df.columns.indexOf(n)))
-      .map(f => StructField(f.name, f.dataType)))
-    (Encoders.row(keySchema), keySchema, in.names.map(df.columns.indexOf(_)))
-  }
-
-  private def foldGroups[T](in: Fields, out: StructField)
-                           (fold: Iterator[Seq[Any]] => T): Stream = {
-    val (keyEnc, keySchema, inIdx) = prep(in)
-    val outSchema = StructType(keySchema.fields :+ out)
-    val outEnc = Encoders.row(outSchema)
-    val ki = keyIdx
-    val res = df.groupByKey(r => Row.fromSeq(ki.map(r.get)))(keyEnc)
+  /** `groupByKey` + `flatMapGroups` over the keys and `in` columns only:
+    * every row of a key-group is shuffled and `fold` sees the group's `in`
+    * values; each emitted tuple is appended to the key. */
+  private def foldGroups(in: Fields, out: Seq[StructField])
+                        (fold: Iterator[Seq[Any]] => Iterator[Seq[Any]]): Stream = {
+    val cols = (keys.names ++ in.names).distinct
+    val pruned = df.select(cols.map(F.col): _*)
+    val (ki, ii) = (keys.names.map(cols.indexOf(_)), in.names.map(cols.indexOf(_)))
+    val keySchema = StructType(ki.map(i => StructField(cols(i), pruned.schema(i).dataType)))
+    val res = pruned.groupByKey(r => Row.fromSeq(ki.map(r.get)))(Encoders.row(keySchema))
       .flatMapGroups { (key: Row, it: Iterator[Row]) =>
-        val v = fold(it.map(r => inIdx.map(r.get)))
-        Iterator(Row.fromSeq(key.toSeq :+ v))
-      }(outEnc)
+        fold(it.map(r => ii.map(r.get))).map(em => Row.fromSeq(key.toSeq ++ em))
+      }(Encoders.row(StructType(keySchema.fields ++ out)))
     new Stream(res)
   }
 }

@@ -199,11 +199,14 @@ object Bpe {
             BpeExpressions.mergePair(c, l, r)
           }))
         // the new cut is materialized (eager), so the previous iteration's
-        // cached blocks are dead — release them, or a long training run
-        // pins O(numMerges × vocab) in the block manager
-        prev.unpersist(blocking = false)
+        // cut is dead — release it, or a long training run leaves
+        // O(numMerges) vocabulary checkpoints in the checkpoint dir
+        Lineage.release(prev)
       }
     }
+    // the merge table below is a driver-side collection: the last round's
+    // vocabulary is dead too
+    Lineage.release(vocab)
     import spark.implicits._
     merges.result().toDF("rank", "lhs", "rhs", "freq")
       .select(F.col("rank").cast("long").as("rank"),

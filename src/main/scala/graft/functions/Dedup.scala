@@ -1063,9 +1063,9 @@ object Dedup {
     var iter = 0
     var anyChanged = true
     var lastWithFlag: DataFrame = null
-    // the cut whose cached blocks the CURRENT `labels` reads from — each
-    // round's new eager cut makes the previous one dead; release it so a
-    // deep graph doesn't pin O(iterations × labels) in the block manager
+    // the cut the CURRENT `labels` reads from — each round's new eager cut
+    // makes the previous one dead; release it so a deep graph doesn't leave
+    // O(iterations) label checkpoints in the checkpoint dir
     var liveCut: DataFrame = labels
     while (iter < maxIter && anyChanged) {
       val nbrMin = edges
@@ -1084,7 +1084,7 @@ object Dedup {
       lastWithFlag = Lineage.cut(next)
       anyChanged = !lastWithFlag.where(F.col("__chg")).isEmpty
       labels = lastWithFlag.drop("__chg")
-      liveCut.unpersist(blocking = false)
+      Lineage.release(liveCut)
       liveCut = lastWithFlag
       iter += 1
     }

@@ -81,11 +81,13 @@ object Graph {
         .groupBy(F.col("dst").as("node"))
         .agg(F.sum("__s").as("__c"))
       // damp * c <= 8.5e5 * 1e6 — far inside BIGINT, no widening needed
+      val prev = state
       state = Lineage.cut(state
         .join(sums, Seq("node"), "left")
         .select(F.col("node"), F.col("deg"), F.expr(
           s"CAST($telePpm AS BIGINT) + $dampPpm * coalesce(__c, CAST(0 AS BIGINT)) DIV 1000000")
           .as("rank_ppm")))
+      Lineage.release(prev) // the new round is materialized (eager cut)
     }
     state.select("node", "deg", "rank_ppm")
   }

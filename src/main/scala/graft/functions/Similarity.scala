@@ -82,7 +82,7 @@ object Similarity {
     * vectors). Returns (cell, centroid array<double>).
     *
     * Each iteration's centroid table is CUT from its lineage (eager
-    * checkpoint of k rows) and the previous iteration's blocks released —
+    * checkpoint of k rows) and the previous iteration's cut released —
     * the same discipline as [[Dedup.duplicateClusters]] and `Bpe.train`.
     * Without the cut, `cents = recentered` re-nests the full
     * assign+recenter plan every iteration: analysis/optimization cost
@@ -112,8 +112,8 @@ object Similarity {
       val prev = cents
       cents = Lineage.cut(recentered)
       // the new cut is materialized (eager): the previous iteration's
-      // cached blocks are dead — release them
-      prev.unpersist(blocking = false)
+      // cut is dead — release it
+      Lineage.release(prev)
       i += 1
     }
     cents
@@ -504,7 +504,15 @@ object Similarity {
     * tier still caps reducer parallelism at d — use it for exact answers
     * at moderate corpus sizes, and [[dimensionRobustStatsSketch]]
     * (bounded k values per dimension, deterministic, still oracle-exact)
-    * as the production face at 100 TB scale. */
+    * as the production face at 100 TB scale.
+    *
+    * Memory: each dimension's group holds its sorted value list (`__vs`,
+    * one long per non-null component) AND the sorted deviations
+    * (`__devs`, same length) at once, about twice the dimension's values.
+    * The two-pass `percentile` shape it replaced buffered a distinct-value
+    * → count map instead, so on corpora whose values repeat (quantized or
+    * low-cardinality embeddings) the buffer now grows with n rather than
+    * with the distinct values — use [[dimensionRobustStatsSketch]] there. */
   def dimensionRobustStats(df: DataFrame, embCol: String): DataFrame = {
     val comps = df.where(F.col(embCol).isNotNull)
       .select(F.posexplode(F.col(embCol)).as(Seq("pos", "v")))

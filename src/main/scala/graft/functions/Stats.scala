@@ -904,7 +904,7 @@ object Stats {
       if (assumeUnderCap) {
         val cells = summary.get(gidOf(allCols)).map(_._1).getOrElse(0L)
         if (cells > maxJointCells) {
-          base.unpersist(blocking = false)
+          Lineage.release(base)
           throw new IllegalArgumentException(
             s"dependencyAudit: assumeUnderCap asserted but the full tuple " +
             s"has $cells joint cells > cap $maxJointCells — the audited " +
@@ -925,8 +925,8 @@ object Stats {
         (a, b, n, ndvA, ndvB, ndvAB, fdOf(ndvA, ndvAB), fdOf(ndvB, ndvAB),
           tvPpm)
       }
-      gs.unpersist(blocking = false)
-      base.unpersist(blocking = false)
+      Lineage.release(gs)
+      Lineage.release(base)
       out
     } else pairs.map { case (a, b) =>
       // per-pair corpus fallback (jointly high-NDV audited columns): one
@@ -963,7 +963,7 @@ object Stats {
           case _ => None
         }
       }
-      joint.unpersist(blocking = false)
+      Lineage.release(joint)
       (a, b, n, ndvA, ndvB, ndvAB, fdOf(ndvA, ndvAB), fdOf(ndvB, ndvAB), tvPpm)
     }
     // literal result frame — the all-integer values are already exact

@@ -165,7 +165,8 @@ object ParquetBackingMap {
     // otherwise accumulate one file per partition per micro-batch forever
     private val segCount = new java.util.concurrent.atomic.AtomicInteger(segments().size)
 
-    /** One atomic WAL segment per multiPut: temp write + rename. Appends
+    /** One atomic WAL segment per multiPut: synced temp write, rename, then
+      * a sync of the directory that holds the rename. Appends
       * run anywhere (executor tasks included); compaction does NOT happen
       * here — it launches a Spark write, which must not nest inside a
       * running task ([[maybeCompact]] runs from the driver-side commit). */
@@ -176,6 +177,10 @@ object ParquetBackingMap {
       Files.write(tmp, body.getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.SYNC)
       Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      // the rename lives in the directory: sync it too, or a power loss
+      // can drop a segment whose append already returned
+      val dirCh = java.nio.channels.FileChannel.open(dir, StandardOpenOption.READ)
+      try dirCh.force(true) finally dirCh.close()
       kvs.foreach { case (k, v) =>
         if (v == Tombstone) cache.remove(k) else cache.put(k, v)
       }

@@ -534,7 +534,7 @@ object IncrementalClusters {
       val cutNext = Lineage.cut(next)
       anyChanged = !cutNext.where(F.col("__chg")).isEmpty
       cur = cutNext.drop("__chg")
-      liveCut.unpersist(blocking = false)
+      Lineage.release(liveCut)
       liveCut = cutNext
       round += 1
     }

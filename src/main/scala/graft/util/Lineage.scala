@@ -1,6 +1,8 @@
 package graft.util
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one place a Dataset's lineage is cut. Every operator that reuses a
   * frame across subplans, or iterates on one, materializes it here instead
@@ -21,4 +23,20 @@ object Lineage {
   def cut[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] =
     if (ds.sparkSession.sparkContext.getCheckpointDir.isEmpty) ds.localCheckpoint(eager)
     else ds.checkpoint(eager = true)
+
+  /** Release a cut that nothing reads any more: the previous round of an
+    * iterative operator, once the next round's eager cut has materialized.
+    * Deletes a reliable cut's `rdd-N` dir, which Spark otherwise leaves in
+    * the checkpoint dir for good, one per round. A local cut's blocks are
+    * left to the ContextCleaner, which drops them once the cut is garbage:
+    * `Dataset.unpersist` only uncaches what `cache`/`persist` registered,
+    * and `RDD.unpersist` logs a warning for every locally checkpointed RDD.
+    * Never pass a cut that the returned plan still reads. */
+  def release(cut: Dataset[_]): Unit = cut.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.getCheckpointFile.foreach { f =>
+      val path = new Path(f)
+      path.getFileSystem(cut.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+    }
+    case _ => ()
+  }
 }

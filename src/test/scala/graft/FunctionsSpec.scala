@@ -1458,6 +1458,21 @@ class FunctionsSpec extends AnyFunSuite {
     assert(reliableTotal == localTotal)
   }
 
+  test("duplicateClusters deletes each finished round's reliable cut") {
+    // a path 1-2-..-n needs n-1 propagation rounds (n-2 to carry label 1
+    // to the far end, one more to see no change), and every round cuts
+    // once; only the edge table and the last round may outlive the call
+    def rddDirs(n: Long): Long = withCheckpointDir { dir =>
+      val path = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+      assert(Dedup.duplicateClusters(path, "a", "b")
+        .select("cluster_id").as[Long].collect().toSet == Set(1L))
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .count(_.getFileName.toString.startsWith("rdd-")).toLong
+    }
+    val (twoRounds, fiveRounds) = (rddDirs(3L), rddDirs(6L))
+    assert(twoRounds == fiveRounds, s"$twoRounds rdd dirs after 2 rounds, $fiveRounds after 5")
+  }
+
   test("keepBestOfClusters: NULL cluster labels pass through as unclustered (ADVICE r16)") {
     // a NULL label means "not clustered" — the drop-list build must not
     // collapse null-labeled rows into one NULL group and keep only one

@@ -78,6 +78,37 @@ class PlanSpec extends AnyFunSuite {
   private def exchanges(p: String): Int =
     p.linesIterator.count(_.dropWhile(c => !c.isLetter).startsWith("Exchange"))
 
+  private def readSchemas(p: String): Seq[String] =
+    "ReadSchema: (struct<[^>]*>)".r.findAllMatchIn(p).map(_.group(1)).toSeq
+
+  // the Combiner SPI lowers to a Catalyst aggregate function: the scan reads
+  // the keys and `in` fields only, partial buffers combine map-side, and no
+  // whole-row deserialization sits over the scan
+  Seq(
+    "q09_global_count" -> "struct<l_orderkey:bigint>",
+    "q10_sum" -> "struct<l_quantity:double>",
+    "q13_combiner_spi" -> "struct<o_totalprice:double,o_orderpriority:string>"
+  ).foreach { case (q, schema) =>
+    test(s"$q Combiner SPI: pruned scan, partial aggregate, no DeserializeToObject") {
+      val p = plan(q)
+      assert(readSchemas(p) == Seq(schema), s"scan not pruned to keys and in:\n$p")
+      assert(p.contains("ObjectHashAggregate") && p.contains("partial_"),
+        s"no partial aggregation:\n$p")
+      assert(!p.contains("DeserializeToObject"), s"whole rows deserialized:\n$p")
+    }
+  }
+
+  // Reducer and Full aggregators keep their groupByKey fold, over pruned input
+  Seq(
+    "q14_reducer_spi" -> "struct<o_orderkey:bigint,o_orderstatus:string>",
+    "q15_full_agg_spi" -> "struct<c_custkey:bigint,c_mktsegment:string>"
+  ).foreach { case (q, schema) =>
+    test(s"$q SPI fold reads only the keys and in fields") {
+      val p = plan(q)
+      assert(readSchemas(p) == Seq(schema), s"scan not pruned to keys and in:\n$p")
+    }
+  }
+
   test("q57 as-of join is single-shuffle: one hash exchange plus the output sort only") {
     val p = plan("q57_asof_join")
     assert(exchanges(p) == 2, s"expected key exchange + output sort only:\n$p")

@@ -153,6 +153,46 @@ class StreamApiSpec extends AnyFunSuite {
     val total = s.aggregate(Fields("v"), new SumDoubleAgg(0), StructField("s", DoubleType))
       .toDF.as[Double].head()
     assert(total == 6.0)
+
+    // empty input: one `zero` row for the whole stream, no rows when grouped
+    val empty = new Stream(s.toDF.where(F.lit(false)))
+    assert(empty.aggregate(Fields("v"), CountAgg, StructField("cnt", LongType))
+      .toDF.as[Long].collect().toSeq == Seq(0L))
+    assert(empty.groupBy(Fields("k"))
+      .aggregate(Fields("v"), CountAgg, StructField("cnt", LongType)).toDF.count() == 0L)
+
+    // a null `in` value reaches init as null
+    val nulls = new CombinerAggregator[Long] {
+      def init(t: Seq[Any]): Long = if (t.head == null) 1L else 0L
+      def combine(a: Long, b: Long): Long = a + b
+      def zero: Long = 0L
+    }
+    val withNull = new Stream(Seq(("a", Some(1.0)), ("a", None), ("b", None))
+      .toDF("k", "v").repartition(2))
+    assert(withNull.aggregate(Fields("v"), nulls, StructField("n", LongType))
+      .toDF.as[Long].head() == 2L)
+    assert(withNull.groupBy(Fields("k")).aggregate(Fields("v"), nulls, StructField("n", LongType))
+      .toDF.as[(String, Long)].collect().toMap == Map("a" -> 1L, "b" -> 1L))
+
+    // a non-primitive accumulator round-trips through the partial buffers;
+    // 300 groups in each of 4 partitions pass ObjectHashAggregate's
+    // 128-key fallback, so the sort-based path merges decoded buffers too
+    val collect = new CombinerAggregator[Seq[Long]] {
+      def init(t: Seq[Any]): Seq[Long] = Seq(t.head.asInstanceOf[Long])
+      def combine(a: Seq[Long], b: Seq[Long]): Seq[Long] = (a ++ b).sorted
+      def zero: Seq[Long] = Seq.empty
+    }
+    val rows = (0L until 2400L).map(i => (i % 300, i))
+    val many = new Stream(rows.toDF("k", "v").repartition(4))
+    val arrOut = StructField("vs", ArrayType(LongType, containsNull = false))
+    val grouped = many.groupBy(Fields("k")).aggregate(Fields("v"), collect, arrOut)
+      .toDF.as[(Long, Seq[Long])].collect().toMap
+    val folded = rows.groupBy(_._1).map { case (k, kvs) =>
+      k -> kvs.map(kv => collect.init(Seq(kv._2))).foldLeft(collect.zero)(collect.combine)
+    }
+    assert(grouped == folded)
+    assert(many.aggregate(Fields("v"), collect, arrOut).toDF.as[Seq[Long]].head() ==
+      rows.map(_._2).sorted)
   }
 
   test("FirstN assembly (partial/final heaps) equals orderBy.limit") {
