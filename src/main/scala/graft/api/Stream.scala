@@ -2,6 +2,10 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.types._
 import graft.api.Operations._
 
@@ -13,7 +17,11 @@ import graft.api.Operations._
   * pruning, partial aggregation and whole-stage codegen. The reference's
   * hand-built planner (`GraphGrouper` fusion, `PartitionNode` exchanges,
   * `TridentTopology.java:265-426`) is deliberately NOT ported: Catalyst's
-  * `EnsureRequirements`/codegen subsumes it (see SURVEY.md §4).
+  * `EnsureRequirements`/codegen subsumes it (see SURVEY.md §4). A batch
+  * stream that is exactly one partition (a table within one file split) is
+  * marked `coalesce(1)` at every repartitioning point, so Catalyst sees
+  * `SinglePartition` and plans no exchange for the fold nor for a sort
+  * above it: the whole query runs as one Spark job ([[Stream.onePartition]]).
   *
   * Used both on static DataFrames (batch/oracle mode) and on streaming
   * DataFrames (Structured Streaming) — the plan builder is mode-agnostic,
@@ -23,6 +31,13 @@ class Stream(val df: DataFrame) extends Serializable {
 
   def fields: Fields = Fields(df.columns.toSeq)
   private def spark = df.sparkSession
+
+  /** [[Stream.onePartition]] of `df`, probed once per Stream on first use by
+    * a repartitioning operator. */
+  @transient private lazy val single: Option[DataFrame] = Stream.onePartition(df)
+
+  /** `df` marked `SinglePartition` when it is one partition, else `df`. */
+  private def pinned: DataFrame = single.getOrElse(df)
 
   /** `Stream.projectionValidation`, Stream.java:362-373. */
   private def validate(requested: Fields): Unit = {
@@ -190,16 +205,19 @@ class Stream(val df: DataFrame) extends Serializable {
   def shuffle(): Stream = new Stream(df.repartition(defaultParallelism))
   def shuffle(n: Int): Stream = new Stream(df.repartition(n))
 
-  /** Hash partition by fields — `partitionBy`, Stream.java:91-94. */
+  /** Hash partition by fields — `partitionBy`, Stream.java:91-94. A
+    * one-partition input already holds every key in one partition: it is
+    * only marked `coalesce(1)`, with no exchange. */
   def partitionBy(keys: Fields): Stream = {
     validate(keys)
-    new Stream(df.repartition(keys.names.map(F.col): _*))
+    new Stream(single.getOrElse(df.repartition(keys.names.map(F.col): _*)))
   }
 
   /** All tuples to one partition — `global()`, Stream.java:104-108. At scale
     * only meaningful in front of a final single-key aggregate; Catalyst's
-    * final-agg stage is the idiomatic form. */
-  def global(): Stream = new Stream(df.repartition(1))
+    * final-agg stage is the idiomatic form. A one-partition input is marked
+    * `coalesce(1)` instead of shuffled. */
+  def global(): Stream = new Stream(single.getOrElse(df.repartition(1)))
 
   /** `batchGlobal()` — in batch mode the dataset IS the batch. */
   def batchGlobal(): Stream = global()
@@ -247,29 +265,34 @@ class Stream(val df: DataFrame) extends Serializable {
   // §2.5 aggregation
   // ------------------------------------------------------------------
 
+  /** Keyed grouping. Every tier of [[GroupedStream]] plans its exchange by
+    * key, except over a one-partition input, which is marked `coalesce(1)`
+    * so the fold and any sort above it plan no exchange. */
   def groupBy(keys: Fields): GroupedStream = {
     validate(keys)
-    new GroupedStream(df, keys)
+    new GroupedStream(pinned, keys)
   }
 
   /** Whole-stream aggregate, Column tier — `Stream.aggregate`
     * (Stream.java:233-264). Catalyst plans the same partial/final pair the
-    * reference builds by hand in `ChainedAggregatorDeclarer.chainEnd`. Every
-    * Column must carry an alias. Multiple columns = chained aggregation
-    * (`chainedAgg`, one pass). */
+    * reference builds by hand in `ChainedAggregatorDeclarer.chainEnd`, with
+    * no exchange between them over a one-partition input. Every Column must
+    * carry an alias. Multiple columns = chained aggregation (`chainedAgg`,
+    * one pass). */
   def aggregate(aggs: Column*): Stream = {
     Stream.validateChainedOutputs(aggs)
-    new Stream(df.agg(aggs.head, aggs.tail: _*))
+    new Stream(pinned.agg(aggs.head, aggs.tail: _*))
   }
 
   /** Whole-stream aggregate via a user CombinerAggregator (SPI tier):
     * `df.agg` over [[Operations.combinerColumn]], so Catalyst plans a
     * partial `ObjectHashAggregate` per partition, one exchange to a single
-    * partition and a final merge, reading only the `in` columns. Empty input
-    * gives one row holding `zero`. */
+    * partition and a final merge, reading only the `in` columns. A
+    * one-partition input plans both phases in one task, with no exchange.
+    * Empty input gives one row holding `zero`. */
   def aggregate[T](in: Fields, agg: CombinerAggregator[T], out: StructField): Stream = {
     validate(in)
-    new Stream(df.agg(Operations.combinerColumn(df, in, agg, out)))
+    new Stream(pinned.agg(Operations.combinerColumn(df, in, agg, out)))
   }
 
   /** Per-partition aggregate — `partitionAggregate` (Stream.java:148-156);
@@ -399,7 +422,11 @@ class Stream(val df: DataFrame) extends Serializable {
   /** Grouped multi-stream reducer — `multiReduce` with a
     * `GroupedMultiReducer` (TridentTopology.java:171-219,
     * `GroupedMultiReducerExecutor.java`). Two-stream form via
-    * `Dataset.cogroup`; output = group fields ++ emitted fields. */
+    * `Dataset.cogroup`; output = group fields ++ emitted fields. When both
+    * inputs are one partition, the cogroup plans no exchange (unless Spark
+    * estimates them above `spark.sql.maxSinglePartitionBytes`) and its
+    * output is marked one partition too, so a sort above it plans none
+    * either. */
   def multiReduce[S](other: Stream, thisKeys: Fields, otherKeys: Fields,
                      reducer: GroupedMultiReducer[S], out: Seq[StructField]): Stream = {
     validate(thisKeys)
@@ -411,15 +438,20 @@ class Stream(val df: DataFrame) extends Serializable {
     val outEnc = Encoders.row(outSchema)
     val lIdx = thisKeys.names.map(df.columns.indexOf(_))
     val rIdx = otherKeys.names.map(other.df.columns.indexOf(_))
-    val grouped = df.groupByKey(r => Row.fromSeq(lIdx.map(r.get)))(keyEnc)
-    val groupedR = other.df.groupByKey(r => Row.fromSeq(rIdx.map(r.get)))(keyEnc)
+    val grouped = pinned.groupByKey(r => Row.fromSeq(lIdx.map(r.get)))(keyEnc)
+    val groupedR = other.pinned.groupByKey(r => Row.fromSeq(rIdx.map(r.get)))(keyEnc)
     val res = grouped.cogroup(groupedR) { (key, lIt, rIt) =>
       var s = reducer.init(key.toSeq)
       lIt.foreach(r => s = reducer.execute(s, 0, r.toSeq))
       rIt.foreach(r => s = reducer.execute(s, 1, r.toSeq))
       reducer.complete(s, key.toSeq).map(em => Row.fromSeq(key.toSeq ++ em))
     }(outEnc)
-    new Stream(res)
+    // with both inputs one partition and no exchange planned between them
+    // the cogroup zips one partition with one, so its output is one too.
+    // Spark re-shuffles single partitions it estimates too large to keep
+    val oneOut = single.isDefined && other.single.isDefined &&
+      !Stream.startsJobs(res.queryExecution.executedPlan)
+    new Stream(if (oneOut) res.coalesce(1) else res)
   }
 
   /** Non-grouped `multiReduce` (TridentTopology.java:171-219 with a plain
@@ -487,6 +519,36 @@ class Stream(val df: DataFrame) extends Serializable {
 }
 
 object Stream {
+  /** The one-partition probe behind every repartitioning operator: when
+    * batch frame `df` is exactly one partition, `df.coalesce(1)`, which
+    * Catalyst sees as `SinglePartition`, so `EnsureRequirements` plans no
+    * exchange for a fold or a sort above it. Decided without running a
+    * Spark job: the physical plan holds no exchange and no subquery, so
+    * building its RDD starts none, and that RDD has one partition. A
+    * streaming frame is never probed. An input of more than one partition
+    * is never coalesced: that would pull a parallel scan into one task.
+    *
+    * The trade-off: a row-multiplying step (say a `flatEach` explode)
+    * between a one-partition input and its grouping now folds in that one
+    * task, where an exchange would have let AQE split the post-shuffle
+    * side. */
+  private[api] def onePartition(df: DataFrame): Option[DataFrame] =
+    if (df.isStreaming) None
+    else {
+      val qe = df.queryExecution
+      if (!startsJobs(qe.executedPlan) && qe.toRdd.getNumPartitions == 1) Some(df.coalesce(1))
+      else None
+    }
+
+  /** Whether building `plan`'s RDD may run a job: it holds an exchange or a
+    * subquery, here or in the plan of a cached relation it reads. */
+  private[api] def startsJobs(plan: SparkPlan): Boolean = plan.exists {
+    case _: Exchange | _: ReusedExchangeExec => true
+    case a: AdaptiveSparkPlanExec => startsJobs(a.initialPlan)
+    case m: InMemoryTableScanExec => startsJobs(m.relation.cachedPlan)
+    case p => p.subqueries.nonEmpty
+  }
+
   /** Chained-aggregation output disjointness — the build-time check of
     * `ChainedAggregatorDeclarer.chainEnd` (ChainedAggregatorDeclarer
     * .java:91-93): "Output fields for chained aggregators must be
@@ -513,7 +575,9 @@ trait GroupedMultiReducer[S] extends Serializable {
   def complete(state: S, group: Seq[Any]): Iterator[Seq[Any]]
 }
 
-/** Keyed grouping handle — `fluent/GroupedStream.java:38-121`. */
+/** Keyed grouping handle — `fluent/GroupedStream.java:38-121`. Built by
+  * [[Stream.groupBy]]: over a one-partition input `df` is already marked
+  * `SinglePartition`, and every tier below plans its fold with no exchange. */
 class GroupedStream(df: DataFrame, val keys: Fields) extends Serializable {
 
   /** Column-tier per-key aggregate — `GroupedStream.aggregate`
@@ -527,7 +591,8 @@ class GroupedStream(df: DataFrame, val keys: Fields) extends Serializable {
   /** SPI tier: CombinerAggregator per key — `groupBy(keys).agg` over
     * [[Operations.combinerColumn]]: map-side partial combines, a shuffle of
     * one buffer per key and partition, then a final merge, over a scan of
-    * the keys and `in` columns only. */
+    * the keys and `in` columns only. A one-partition input runs both phases
+    * in one task with no shuffle. */
   def aggregate[T](in: Fields, agg: Operations.CombinerAggregator[T],
                    out: StructField): Stream =
     new Stream(df.groupBy(keys.names.map(F.col): _*)
@@ -557,7 +622,7 @@ class GroupedStream(df: DataFrame, val keys: Fields) extends Serializable {
     * [[graft.plans.TopK]] operator: per-partition bounded heaps partial-
     * reduce BEFORE the exchange, so the shuffle carries at most n rows per
     * key per partition instead of the full stream the window `row_number`
-    * form would sort and ship. */
+    * form would sort and ship. A one-partition input plans no exchange. */
   def firstN(n: Int, sortField: String, reverse: Boolean = false,
              tieBreak: Seq[String] = Nil): Stream =
     new Stream(graft.plans.TopK.topKPerKey(df, keys.names, sortField,
@@ -580,8 +645,9 @@ class GroupedStream(df: DataFrame, val keys: Fields) extends Serializable {
   def toStream: Stream = new Stream(df)
 
   /** `groupByKey` + `flatMapGroups` over the keys and `in` columns only:
-    * every row of a key-group is shuffled and `fold` sees the group's `in`
-    * values; each emitted tuple is appended to the key. */
+    * every row of a key-group is shuffled (a one-partition input is not) and
+    * `fold` sees the group's `in` values; each emitted tuple is appended to
+    * the key. */
   private def foldGroups(in: Fields, out: Seq[StructField])
                         (fold: Iterator[Seq[Any]] => Iterator[Seq[Any]]): Stream = {
     val cols = (keys.names ++ in.names).distinct

@@ -505,8 +505,10 @@ object IncrementalClusters {
     * log-many self-joins over the link files. Labels equal the driver
     * face's by construction (same links, same fixpoint). Read between
     * commits, like any LSM reader. The returned frame is backed by the
-    * final localCheckpoint round (executor-resident blocks on a cluster)
-    * — unpersist it when done. */
+    * final round's lineage cut ([[graft.util.Lineage.cut]]): when done,
+    * `Lineage.release` deletes a reliable cut's files, and the
+    * ContextCleaner drops a local cut's blocks once the frame is garbage
+    * (`unpersist` frees neither). */
   def snapshotDistributed(spark: org.apache.spark.sql.SparkSession,
                           dir: String, maxRounds: Int = 24): DataFrame =
     resolveLinkFrame(

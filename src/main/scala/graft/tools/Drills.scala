@@ -117,11 +117,7 @@ object Drills {
       (sec, nPairs, emitted, clusters)
     } finally {
       graft.streaming.IncrementalClusters.clearInMemory(id)
-      // release the checkpointed pair blocks deterministically — reps
-      // across a bench session would otherwise accumulate in storage
-      // memory until GC (code-review r14 #6; duplicateClusters discipline)
-      pairs.unpersist(blocking = false)
-      ()
+      Lineage.release(pairs)
     }
   }
 
@@ -396,8 +392,7 @@ object Drills {
       (sec, nPairs, emitted, winners)
     } finally {
       graft.streaming.IncrementalClusters.clearInMemory(id)
-      pairs.unpersist(blocking = false)
-      ()
+      Lineage.release(pairs)
     }
   }
 

@@ -457,7 +457,7 @@ object ScaleDrill {
       }
       val snap = inc.snapshot(docs.sparkSession) // driver-built: safe to clear
       graft.streaming.IncrementalClusters.clearInMemory(id)
-      pairs.unpersist(blocking = false) // release the checkpointed blocks
+      Lineage.release(pairs)
       snap
     },
     // one token explode into a vocabulary-keyed min(batch) aggregate
@@ -1465,8 +1465,8 @@ object ScaleDrill {
       val nClusters = labels.select(F.countDistinct("cluster_id")).head().getLong(0)
       val nHot = labels.where(F.col("cluster_id") === hub).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      labels.unpersist(blocking = false)
-      pairs.unpersist(blocking = false)
+      Lineage.release(labels)
+      Lineage.release(pairs)
       println(f"[scale] megacluster M=$m%9d sec=$sec%7.2f clusters=$nClusters%7d hot=$nHot%9d")
       require(nHot == m && nClusters == 100001L,
         s"megacluster labels wrong: hot=$nHot clusters=$nClusters")
@@ -1538,7 +1538,7 @@ object ScaleDrill {
         f"driver-face=$driverSec%.1fs (rows=$nDriver) diffs=$diff1/$diff2")
       require(nDist == keys.toLong && diff1 == 0 && diff2 == 0,
         s"distributed labels wrong: n=$nDist diffs=$diff1/$diff2")
-      dist.unpersist(blocking = false)
+      Lineage.release(dist)
     } finally {
       graft.state.DiskBackingMap.close(s"$dir/parents")
       graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))

@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one place a Dataset's lineage is cut. Every operator that reuses a
@@ -31,12 +32,17 @@ object Lineage {
     * left to the ContextCleaner, which drops them once the cut is garbage:
     * `Dataset.unpersist` only uncaches what `cache`/`persist` registered,
     * and `RDD.unpersist` logs a warning for every locally checkpointed RDD.
+    * `cut` may also be a projection of a cut, which reads nothing else.
     * Never pass a cut that the returned plan still reads. */
-  def release(cut: Dataset[_]): Unit = cut.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.getCheckpointFile.foreach { f =>
+  def release(cut: Dataset[_]): Unit = {
+    def checkpointed(p: LogicalPlan): Option[LogicalRDD] = p match {
+      case r: LogicalRDD => Some(r)
+      case Project(_, child) => checkpointed(child)
+      case _ => None
+    }
+    checkpointed(cut.queryExecution.logical).flatMap(_.rdd.getCheckpointFile).foreach { f =>
       val path = new Path(f)
       path.getFileSystem(cut.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
     }
-    case _ => ()
   }
 }

@@ -1458,6 +1458,18 @@ class FunctionsSpec extends AnyFunSuite {
     assert(reliableTotal == localTotal)
   }
 
+  test("Lineage.release deletes a reliable cut's files, also through a projection of it") {
+    withCheckpointDir { dir =>
+      def written = java.nio.file.Files.walk(dir).iterator().asScala
+        .count(_.getFileName.toString.startsWith("rdd-"))
+      val cut = graft.util.Lineage.cut((1L to 10L).toDF("n"))
+      val projected = cut.select(($"n" + 1).as("m"))
+      assert(written == 1)
+      graft.util.Lineage.release(projected)
+      assert(written == 0)
+    }
+  }
+
   test("duplicateClusters deletes each finished round's reliable cut") {
     // a path 1-2-..-n needs n-1 propagation rounds (n-2 to carry label 1
     // to the far end, one more to see no change), and every round cuts

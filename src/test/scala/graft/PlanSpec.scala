@@ -527,4 +527,119 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges(p) >= 1, s"no exchange between partial and final SPI stages:\n$p")
     assert(agg.toDF.as[Long].head() == 5050L)
   }
+
+  // ---- one-partition inputs plan no exchange ----
+
+  // orders, events and customer are each within one file split, so every
+  // repartitioning point of these queries sees a one-partition input
+  private val onePartitionQueries =
+    Seq("q08_partition_agg", "q13_combiner_spi", "q14_reducer_spi", "q15_full_agg_spi",
+      "q23_multireduce")
+
+  onePartitionQueries.foreach { q =>
+    test(s"$q over a one-partition table plans no exchange, not even for its sort") {
+      val p = plan(q)
+      assert(exchanges(p) == 0, s"exchange over a one-partition input:\n$p")
+    }
+  }
+
+  test("building the one-partition queries runs no Spark job") {
+    SparkEntry.warmTables(spark, dir)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id"))); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("plan-spec-build", "build")
+      onePartitionQueries.foreach(q => SparkEntry.queries(q)(spark, dir))
+      // the listener bus delivers in order: once this job's start has
+      // arrived, so has the start of any job the build ran
+      sc.setJobGroup("plan-spec-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("plan-spec-fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("plan-spec-fence"), "fence job never reached the listener")
+      assert(!groups.contains("plan-spec-build"), s"the build ran jobs: $groups")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // each operator over the same rows twice: a one-file parquet table, which
+  // is one partition (no exchange, not even under the sort), and its
+  // repartition(4) (today's exchanges kept)
+  {
+    import org.apache.spark.sql.{DataFrame, functions => F}
+    import org.apache.spark.sql.types.{LongType, StructField}
+    import graft.api.{Fields, Stream}
+    import graft.api.Operations.{CountAsAggregator, SumLongAgg}
+    val long = (n: String) => StructField(n, LongType)
+    def half(in: DataFrame, parity: Int): Stream = new Stream(in.where(F.col("v") % 2 === parity))
+    Seq[(String, Boolean, DataFrame => DataFrame)](
+      ("groupBy Column aggregate", true, in => new Stream(in).groupBy(Fields("k"))
+        .aggregate(F.sum("v").as("s")).toDF),
+      ("groupBy Combiner aggregate", true, in => new Stream(in).groupBy(Fields("k"))
+        .aggregate(Fields("v"), new SumLongAgg(0), long("s")).toDF),
+      ("groupBy Reducer aggregate", false, in => new Stream(in).groupBy(Fields("k"))
+        .aggregate(Fields("v"), SparkEntry.CountReducer, long("n")).toDF),
+      ("groupBy Full aggregate", false, in => new Stream(in).groupBy(Fields("k"))
+        .aggregate(Fields("v"), CountAsAggregator, Seq(long("n"))).toDF),
+      ("groupBy firstN", false, in => new Stream(in).groupBy(Fields("k"))
+        .firstN(3, "v", reverse = true).toDF),
+      ("whole-stream Combiner aggregate", true, in => new Stream(in)
+        .aggregate(Fields("v"), new SumLongAgg(0), long("s")).toDF),
+      ("partitionBy + partitionAggregate", false, in => new Stream(in)
+        .partitionBy(Fields("k"))
+        .partitionAggregate(Fields("k"), SparkEntry.PerKeyCount, Seq(long("k"), long("n"))).toDF),
+      ("multiReduce", false, in => half(in, 0).multiReduce(half(in, 1), Fields("k"), Fields("k"),
+        SparkEntry.ClickPurchaseReducer, Seq(long("n0"), long("n1"))).toDF)
+    ).foreach { case (name, partial, build) =>
+      test(s"$name: no exchange over one partition; repartition(4) twin keeps its exchanges") {
+        val dir = java.nio.file.Files.createTempDirectory("graft-plan-twins")
+        try {
+          spark.range(0, 400, 1, 1).select((F.col("id") % 7).as("k"), F.col("id").as("v"))
+            .write.mode("overwrite").parquet(dir.toString)
+          val rows = spark.read.parquet(dir.toString)
+          val one = build(rows)
+          val many = build(rows.repartition(4))
+          val onePlan = one.orderBy(one.columns.head).queryExecution.executedPlan.toString
+          val manyPlan = many.queryExecution.executedPlan.toString
+          assert(exchanges(onePlan) == 0, s"exchange over a one-partition input:\n$onePlan")
+          assert(manyPlan.contains("Exchange hashpartitioning") ||
+            manyPlan.contains("Exchange SinglePartition"),
+            s"the many-partition twin lost its exchange:\n$manyPlan")
+          if (partial) {
+            assert(onePlan.contains("partial_"), s"no partial aggregate:\n$onePlan")
+            assert(manyPlan.contains("partial_"), s"no partial aggregate:\n$manyPlan")
+          }
+          def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+          assert(sorted(one) == sorted(many))
+        } finally graft.util.Fs.deleteRecursively(dir)
+      }
+    }
+  }
+
+  test("multiReduce leaves its output unmarked when Spark re-shuffles its one-partition inputs") {
+    // RDD-backed inputs carry no size estimate, so EnsureRequirements
+    // hash-partitions both single partitions: marking the cogroup's output
+    // one partition would then pull its post-shuffle side into one task
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, StructField}
+    import graft.api.{Fields, Stream}
+    val in = spark.sparkContext.parallelize(0L until 40L, 1).toDF("k")
+    val out = new Stream(in).multiReduce(new Stream(in), Fields("k"), Fields("k"),
+        SparkEntry.ClickPurchaseReducer,
+        Seq(StructField("n0", LongType), StructField("n1", LongType)))
+      .toDF
+    val p = out.queryExecution.executedPlan.toString
+    assert(p.contains("Exchange hashpartitioning"), s"expected the re-shuffle:\n$p")
+    assert(!p.take(p.indexOf("CoGroup")).contains("Coalesce"),
+      s"cogroup output marked one partition over a shuffle:\n$p")
+    assert(out.count() == 40L)
+  }
 }

@@ -12,8 +12,6 @@ class ScaleSpec extends AnyFunSuite {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()
 
   import spark.implicits._
@@ -70,37 +68,39 @@ class ScaleSpec extends AnyFunSuite {
   test("partitioned writes prune the scan to the filtered partitions") {
     val docs = (1 to 300).map(i =>
       (i.toLong, s"text $i", if (i % 3 == 0) "de" else "en")).toDF("id", "text", "lang")
-    val path = java.nio.file.Files.createTempDirectory("graft-part").toString
-    Scale.writePartitioned(docs, path, Seq("lang"))
-    // one directory per lang, one file per directory (repartition-first)
-    val langDirs = new java.io.File(path).listFiles().filter(_.getName.startsWith("lang="))
-    assert(langDirs.map(_.getName).toSet == Set("lang=en", "lang=de"))
-    val read = spark.read.parquet(path).where($"lang" === "de")
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(lang"), s"no partition pruning:\n$plan")
-    assert(read.count() == 100)
+    val dir = java.nio.file.Files.createTempDirectory("graft-part")
+    try {
+      val path = dir.toString
+      Scale.writePartitioned(docs, path, Seq("lang"))
+      // one directory per lang, one file per directory (repartition-first)
+      val langDirs = new java.io.File(path).listFiles().filter(_.getName.startsWith("lang="))
+      assert(langDirs.map(_.getName).toSet == Set("lang=en", "lang=de"))
+      val read = spark.read.parquet(path).where($"lang" === "de")
+      val plan = read.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(lang"), s"no partition pruning:\n$plan")
+      assert(read.count() == 100)
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("bucketed tables join with no shuffle exchange") {
     val l = (1L to 1000L).map(i => (i, i * 2)).toDF("id", "a")
     val r = (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "b")
-    // the session may be reused across suites: clear both the catalog entry
-    // and any orphaned managed-table location from a previous JVM
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    Seq("bl", "br").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(wh, t)
-      if (dir.exists()) {
-        dir.listFiles().foreach(_.delete()); dir.delete()
-      }
+    // managed tables go to a database under a temp dir: the session may be
+    // another suite's, whose warehouse dir is static
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed")
+    spark.sql(s"CREATE DATABASE scale_spec LOCATION '${dir.toUri}'")
+    try {
+      Scale.writeBucketed(l, "scale_spec.bl", Seq("id"), 8)
+      Scale.writeBucketed(r, "scale_spec.br", Seq("id"), 8)
+      val joined = spark.table("scale_spec.bl").join(spark.table("scale_spec.br"), "id")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"bucketed join still shuffles:\n$plan")
+      assert(joined.count() == 1000L)
+    } finally {
+      spark.sql("DROP DATABASE scale_spec CASCADE")
+      graft.util.Fs.deleteRecursively(dir)
     }
-    Scale.writeBucketed(l, "bl", Seq("id"), 8)
-    Scale.writeBucketed(r, "br", Seq("id"), 8)
-    val joined = spark.table("bl").join(spark.table("br"), "id")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join still shuffles:\n$plan")
-    assert(joined.count() == 1000L)
   }
 
   test("zorder2: bit-interleave correctness and 2-D locality of the layout") {

@@ -254,4 +254,35 @@ class StreamApiSpec extends AnyFunSuite {
       .toDF.orderBy("u").as[(String, Long, Long)].collect()
     assert(out.toSeq == Seq(("u1", 2L, 1L), ("u2", 1L, 0L)))
   }
+
+  test("a streaming DataFrame passes through groupBy unprobed") {
+    // probing plans the frame physically, which a streaming frame refuses
+    // outside writeStream.start()
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val counts = new Stream(input.toDF().toDF("word"))
+      .groupBy(Fields("word"))
+      .aggregate(Fields("word"), CountAgg, StructField("cnt", LongType))
+      .toDF
+    assert(counts.isStreaming)
+    assert(counts.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+    }.isEmpty, "a streaming frame was marked one partition")
+  }
+
+  test("global, batchGlobal and whole-stream aggregate give the same rows over one and four partitions") {
+    val one = spark.range(0, 100, 1, 1).toDF("n")
+    val four = one.repartition(4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    Seq[Stream => org.apache.spark.sql.DataFrame](
+      _.global().toDF,
+      _.batchGlobal().toDF,
+      _.aggregate(F.sum("n").as("s")).toDF,
+      _.aggregate(Fields("n"), new SumLongAgg(0), StructField("s", LongType)).toDF
+    ).foreach { op =>
+      assert(rows(op(new Stream(one))) == rows(op(new Stream(four))))
+    }
+    assert(new Stream(one).global().toDF.rdd.getNumPartitions == 1)
+    assert(new Stream(four).global().toDF.rdd.getNumPartitions == 1)
+  }
 }
