@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.util.LocalCheckpointFileManager
 
 /** Continuous-processing face — the low-latency per-tuple execution mode.
   *
@@ -40,12 +41,14 @@ object ContinuousRunner {
       .option("rowsPerSecond", rowsPerSecond.toString)
       .option("numPartitions", numPartitions.toString)
       .load()
-    transform(src).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.Continuous(epochMs))
-      .start()
+    LocalCheckpointFileManager.scoped(spark) {
+      transform(src).writeStream
+        .format("memory")
+        .queryName(queryName)
+        .outputMode("append")
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.Continuous(epochMs))
+        .start()
+    }
   }
 }

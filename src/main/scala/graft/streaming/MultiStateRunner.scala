@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.api.Fields
 import graft.state.MapState
+import graft.util.LocalCheckpointFileManager
 
 /** Coordinated commit across MULTIPLE states fed by one topology —
   * SURVEY.md §7.4 hard part 2.
@@ -44,12 +45,14 @@ object MultiStateRunner {
 
   def run(stream: DataFrame, sinks: Seq[StateSink[_]], queryName: String,
           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, sinks)
-      }
-      .start()
+    LocalCheckpointFileManager.scoped(stream.sparkSession) {
+      stream.writeStream
+        .queryName(queryName)
+        .outputMode("update")
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          applyBatch(batch, batchId, sinks)
+        }
+        .start()
+    }
 }

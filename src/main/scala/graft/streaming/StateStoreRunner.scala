@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import graft.util.{LocalCheckpointFileManager, SessionConf}
 
 /** Scale-native keyed state over Spark's state store —
   * `persistentAggregate` via `transformWithState` (SURVEY.md §7.1 path (a)).
@@ -40,6 +41,14 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * Requires
   * `spark.sql.streaming.stateStore.providerClass=
   * org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider`.
+  *
+  * Where checkpoint writes go: a query started inside [[withStateConfig]]
+  * (or by any runner in this package) writes its local checkpoint files
+  * through [[graft.util.LocalCheckpointFileManager]] — temp file + fsync,
+  * atomic rename or no-clobber hard link, directory fsync — because at a
+  * few hundred ms per trigger the ~100 `chmod`/`readlink` launches of
+  * Hadoop's local write path were most of a trigger. Reads, and
+  * checkpoints on other filesystems, stay on Spark's managers.
   */
 object StateStoreRunner {
 
@@ -778,26 +787,22 @@ object StateStoreRunner {
     * read at first start, then rides the checkpoint) with the given
     * partition count and, by default, RocksDB changelog checkpointing
     * (upload the per-batch delta, not a full snapshot — the production
-    * posture for frequent small commits). Both confs are restored on
-    * exit; a RESTART from the same checkpoint keeps the frozen partition
-    * count whatever the session conf then says (spec-pinned). */
+    * posture for frequent small commits). The query's checkpoint files
+    * (offset and commit log entries, each partition's changelog and its
+    * checksum) are written by [[graft.util.LocalCheckpointFileManager]]
+    * when the checkpoint is local: java.nio writes with fsync instead of
+    * Hadoop's, which launch ~10 processes per file without the native
+    * library. All three confs are restored on exit; a RESTART from the
+    * same checkpoint keeps the frozen partition count whatever the
+    * session conf then says (spec-pinned). */
   def withStateConfig[A](spark: SparkSession, statePartitions: Int,
                          changelogCheckpointing: Boolean = true)(body: => A): A = {
     require(statePartitions > 0, s"statePartitions must be > 0, got $statePartitions")
-    val pKey = "spark.sql.shuffle.partitions"
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevParts = spark.conf.get(pKey)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(pKey, statePartitions.toString)
-    spark.conf.set(clKey, changelogCheckpointing.toString)
-    try body
-    finally {
-      spark.conf.set(pKey, prevParts)
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None => spark.conf.unset(clKey)
-      }
+    SessionConf.scoped(spark,
+      "spark.sql.shuffle.partitions" -> statePartitions.toString,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        changelogCheckpointing.toString) {
+      LocalCheckpointFileManager.scoped(spark)(body)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.api.{Fields, Stream}
+import graft.util.LocalCheckpointFileManager
 
 /** Streaming face of the per-batch join — `TridentTopology.join` semantics
   * (`JoinerMultiReducer.java:32-158`): the join scope is a SINGLE batch,
@@ -32,18 +33,20 @@ object StreamJoinRunner {
       .unionByName(right.select(F.lit(1).as("__src"),
         F.lit(null).cast(org.apache.spark.sql.types.StructType(lSchema)).as("__l"),
         rStruct.as("__r")))
-    tagged.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val l = batch.where(F.col("__src") === 0).select("__l.*")
-        val r = batch.where(F.col("__src") === 1).select("__r.*")
-        val joined = new Stream(l).join(new Stream(r), leftKeys, rightKeys,
-          outFields, joinType)
-        sink(joined.toDF, batchId)
-      }
-      .start()
+    LocalCheckpointFileManager.scoped(left.sparkSession) {
+      tagged.writeStream
+        .queryName(queryName)
+        .outputMode("append")
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val l = batch.where(F.col("__src") === 0).select("__l.*")
+          val r = batch.where(F.col("__src") === 1).select("__r.*")
+          val joined = new Stream(l).join(new Stream(r), leftKeys, rightKeys,
+            outFields, joinType)
+          sink(joined.toDF, batchId)
+        }
+        .start()
+    }
   }
 
   /** Cross-batch stream-stream join — the Spark-native upgrade the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.api.Fields
 import graft.state._
+import graft.util.LocalCheckpointFileManager
 
 /** Streaming execution of `persistentAggregate` — Trident's stateful sink
   * tier (`Stream.java:282-318`, `GroupedStream.java:86-121`,
@@ -71,14 +72,16 @@ object StreamRunner {
                              combine: (T, T) => T, state: MapState[T],
                              queryName: String,
                              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId, keys, partial, combine, state)
-      }
-      .start()
+    LocalCheckpointFileManager.scoped(stream.sparkSession) {
+      stream.writeStream
+        .queryName(queryName)
+        .outputMode("update")
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          applyBatch(batch, batchId, keys, partial, combine, state)
+        }
+        .start()
+    }
 
   /** Global (non-grouped) `persistentAggregate` → `SnapshottableMap`
     * (`Stream.java:282-301`, `$GLOBAL$` key). */
@@ -86,20 +89,22 @@ object StreamRunner {
                                    combine: (T, T) => T, state: MapState[T],
                                    queryName: String,
                                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val snap = new SnapshottableMap[T](state)
-        val rows = batch.agg(partial.as("__partial")).collect()
-        state.beginCommit(Some(batchId))
-        if (rows.nonEmpty && !rows.head.isNullAt(0)) {
-          snap.update(CombinerValueUpdater[T](rows.head.getAs[T](0), combine))
+    LocalCheckpointFileManager.scoped(stream.sparkSession) {
+      stream.writeStream
+        .queryName(queryName)
+        .outputMode("update")
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val snap = new SnapshottableMap[T](state)
+          val rows = batch.agg(partial.as("__partial")).collect()
+          state.beginCommit(Some(batchId))
+          if (rows.nonEmpty && !rows.head.isNullAt(0)) {
+            snap.update(CombinerValueUpdater[T](rows.head.getAs[T](0), combine))
+          }
+          state.commit(Some(batchId))
         }
-        state.commit(Some(batchId))
-      }
-      .start()
+        .start()
+    }
 
   /** File-sink face of `partitionPersist`: each micro-batch commits to a
     * [[graft.sources.TransactionalParquetSink]] directory exactly once —
@@ -117,18 +122,20 @@ object StreamRunner {
   def persistFiles(stream: DataFrame, dir: String, queryName: String,
                    trigger: Trigger = Trigger.AvailableNow(),
                    checkpointDir: String = ""): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation",
-        if (checkpointDir.nonEmpty) checkpointDir
-        else java.nio.file.Paths.get(dir, "_checkpoint").toString)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.TransactionalParquetSink.writeBatch(batch, batchId, dir)
-        ()
-      }
-      .start()
+    LocalCheckpointFileManager.scoped(stream.sparkSession) {
+      stream.writeStream
+        .queryName(queryName)
+        .outputMode("append")
+        .option("checkpointLocation",
+          if (checkpointDir.nonEmpty) checkpointDir
+          else java.nio.file.Paths.get(dir, "_checkpoint").toString)
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          graft.sources.TransactionalParquetSink.writeBatch(batch, batchId, dir)
+          ()
+        }
+        .start()
+    }
 
   /** `partitionPersist(stateFactory, inputFields, StateUpdater, newFields)`
     * — the raw sink tier (`Stream.java:170-193`,
@@ -142,14 +149,16 @@ object StreamRunner {
   def partitionPersist[S <: MapState[_]](stream: DataFrame, in: Fields, state: S,
                                          updater: StateUpdater[S], queryName: String,
                                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        partitionPersistBatch(batch, batchId, in, state, updater)
-      }
-      .start()
+    LocalCheckpointFileManager.scoped(stream.sparkSession) {
+      stream.writeStream
+        .queryName(queryName)
+        .outputMode("update")
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          partitionPersistBatch(batch, batchId, in, state, updater)
+        }
+        .start()
+    }
 
   /** One batch of [[partitionPersist]] — exposed for replay tests.
     *
@@ -186,14 +195,16 @@ object StreamRunner {
     * downstream jobs prune on `__batch_id` like any partition column. */
   def exactlyOnceParquetSink(stream: DataFrame, path: String, queryName: String,
                              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exactlyOnceParquetBatch(batch, batchId, path)
-      }
-      .start()
+    LocalCheckpointFileManager.scoped(stream.sparkSession) {
+      stream.writeStream
+        .queryName(queryName)
+        .outputMode("append")
+        .trigger(trigger)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          exactlyOnceParquetBatch(batch, batchId, path)
+        }
+        .start()
+    }
 
   /** One batch of [[exactlyOnceParquetSink]] — exposed for replay tests. */
   def exactlyOnceParquetBatch(batch: DataFrame, txid: Long, path: String): Unit =

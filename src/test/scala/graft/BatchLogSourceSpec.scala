@@ -43,37 +43,39 @@ class BatchLogSourceSpec extends AnyFunSuite {
     MemoryBackingMap.clear("ckpt-wc")
     val state = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]]("ckpt-wc"))
     val checkpoint = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    try {
 
-    def startQuery() = {
-      val df = spark.readStream.format("graft.sources.BatchLogProvider")
-        .option("log", "ckpt").load()
-      val words = df.select(F.explode(F.split(F.col("value"), " ")).as("word"))
-      words.writeStream
-        .queryName("ckpt-test")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamRunner.applyBatch[Long](batch, id, Fields("word"),
-            F.count(F.lit(1)).as("cnt"), _ + _, state)
-        }
-        .start()
-    }
+      def startQuery() = {
+        val df = spark.readStream.format("graft.sources.BatchLogProvider")
+          .option("log", "ckpt").load()
+        val words = df.select(F.explode(F.split(F.col("value"), " ")).as("word"))
+        words.writeStream
+          .queryName("ckpt-test")
+          .outputMode("update")
+          .option("checkpointLocation", checkpoint)
+          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+            StreamRunner.applyBatch[Long](batch, id, Fields("word"),
+              F.count(F.lit(1)).as("cnt"), _ + _, state)
+          }
+          .start()
+      }
 
-    val q1 = startQuery()
-    q1.processAllAvailable()
-    q1.stop()
-    assert(MemoryBackingMap.snapshot[OpaqueValue[Long]]("ckpt-wc")(Seq("a")).curr == 3L)
+      val q1 = startQuery()
+      q1.processAllAvailable()
+      q1.stop()
+      assert(MemoryBackingMap.snapshot[OpaqueValue[Long]]("ckpt-wc")(Seq("a")).curr == 3L)
 
-    // restart from the same checkpoint: already-committed batches must NOT
-    // re-apply; only the new batch is processed
-    BatchLog.append("ckpt", Seq("b b"))
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop()
-    val snap = MemoryBackingMap.snapshot[OpaqueValue[Long]]("ckpt-wc")
-    assert(snap(Seq("a")).curr == 3L)   // unchanged — offsets resumed
-    assert(snap(Seq("b")).curr == 3L)   // 1 + 2 from the post-restart batch
+      // restart from the same checkpoint: already-committed batches must NOT
+      // re-apply; only the new batch is processed
+      BatchLog.append("ckpt", Seq("b b"))
+      val q2 = startQuery()
+      q2.processAllAvailable()
+      q2.stop()
+      val snap = MemoryBackingMap.snapshot[OpaqueValue[Long]]("ckpt-wc")
+      assert(snap(Seq("a")).curr == 3L)   // unchanged — offsets resumed
+      assert(snap(Seq("b")).curr == 3L)   // 1 + 2 from the post-restart batch
+    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(checkpoint))
   }
 
   test("maxBatchesPerTrigger throttles backlog draining (max.spout.pending analog)") {
@@ -122,44 +124,46 @@ class BatchLogSourceSpec extends AnyFunSuite {
     import spark.implicits._
     val id = s"kv-${java.util.UUID.randomUUID()}"
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    val q = input.toDF().toDF("key")
-      .groupBy("key").agg(F.count(F.lit(1)).as("value"))
-      .writeStream
-      .outputMode("update")
-      .format("graft.sources.KvStoreSink")
-      .option("storeId", id)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("kvsink-ck").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      .start()
-    input.addData("a", "b", "a")
-    q.processAllAvailable()
-    input.addData("a")
-    q.processAllAvailable()
-    q.stop()
+    val ck = java.nio.file.Files.createTempDirectory("graft-kvsink-ck")
+    try {
+      val q = input.toDF().toDF("key")
+        .groupBy("key").agg(F.count(F.lit(1)).as("value"))
+        .writeStream
+        .outputMode("update")
+        .format("graft.sources.KvStoreSink")
+        .option("storeId", id)
+        .option("checkpointLocation", ck.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+        .start()
+      input.addData("a", "b", "a")
+      q.processAllAvailable()
+      input.addData("a")
+      q.processAllAvailable()
+      q.stop()
 
-    // update mode re-emits a key with its NEW TOTAL and the sink commit
-    // overwrites that key's slot: epoch 0 wrote a→2 b→1; epoch 1 re-emitted
-    // a→3 (not a +1 delta — an additive merge would land on 5)
-    assert(KvStoreSink.committedEpochs(id) == Set(0L, 1L))
-    val afterRun = KvStoreSink.snapshot(id)
-    assert(afterRun("a") == 3L)
-    assert(afterRun("b") == 1L)
+      // update mode re-emits a key with its NEW TOTAL and the sink commit
+      // overwrites that key's slot: epoch 0 wrote a→2 b→1; epoch 1 re-emitted
+      // a→3 (not a +1 delta — an additive merge would land on 5)
+      assert(KvStoreSink.committedEpochs(id) == Set(0L, 1L))
+      val afterRun = KvStoreSink.snapshot(id)
+      assert(afterRun("a") == 3L)
+      assert(afterRun("b") == 1L)
 
-    // a recovering run of the SAME query (same checkpoint → same queryId)
-    // re-commits epoch 1 — the sink must recognize and skip it
-    // (exactly-once on the write side)
-    val replayed = graft.sources.KvStoreSink.commitEpoch(
-      id, q.id.toString, 1L, Seq("a" -> 999L))
-    assert(!replayed)
-    assert(KvStoreSink.snapshot(id) == afterRun)
+      // a recovering run of the SAME query (same checkpoint → same queryId)
+      // re-commits epoch 1 — the sink must recognize and skip it
+      // (exactly-once on the write side)
+      val replayed = graft.sources.KvStoreSink.commitEpoch(
+        id, q.id.toString, 1L, Seq("a" -> 999L))
+      assert(!replayed)
+      assert(KvStoreSink.snapshot(id) == afterRun)
 
-    // a DIFFERENT query writing to the same store is NOT a replay: its
-    // epochs restart at 0 and its batches must land
-    val fresh = graft.sources.KvStoreSink.commitEpoch(
-      id, "other-query", 1L, Seq("c" -> 7L))
-    assert(fresh)
-    assert(KvStoreSink.snapshot(id)("c") == 7L)
-    KvStoreSink.clear(id)
+      // a DIFFERENT query writing to the same store is NOT a replay: its
+      // epochs restart at 0 and its batches must land
+      val fresh = graft.sources.KvStoreSink.commitEpoch(
+        id, "other-query", 1L, Seq("c" -> 7L))
+      assert(fresh)
+      assert(KvStoreSink.snapshot(id)("c") == 7L)
+      KvStoreSink.clear(id)
+    } finally graft.util.Fs.deleteRecursively(ck)
   }
 }

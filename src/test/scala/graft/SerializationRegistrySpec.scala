@@ -33,8 +33,8 @@ class SerializationRegistrySpec extends AnyFunSuite {
       .getOrCreate()
     SerializationRegistry.register(classOf[WordStats],
       SerializationRegistry.opaque(wordStatsCodec))
+    val dir = java.nio.file.Files.createTempDirectory("graft-reg").toString
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft-reg").toString
       val m1 = new OpaqueMap[WordStats](
         SerializationRegistry.openRegistered[OpaqueValue[WordStats]](
           spark, dir, classOf[WordStats], compactAfter = 1))
@@ -57,7 +57,11 @@ class SerializationRegistrySpec extends AnyFunSuite {
         old => { assert(old.isEmpty); WordStats(1, "hiss") })))
       m2.commit(Some(0L))
       assert(replayed == Seq(WordStats(1, "hiss")))
-    } finally SerializationRegistry.unregister(classOf[WordStats])
+    } finally {
+      SerializationRegistry.unregister(classOf[WordStats])
+      ParquetBackingMap.close(dir)
+      graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+    }
   }
 
   test("unregistered class fails loudly; java fallback is opt-in and round-trips") {

@@ -108,52 +108,55 @@ class StateSpec extends AnyFunSuite {
       .getOrCreate()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-pbm").toString
+    try {
 
-    val batches = Seq(
-      Seq("the cat sat", "the dog sat"),
-      Seq("the cat ran"),
-      Seq("a dog barked loudly"))
-    def wordsDF(b: Seq[String]) =
-      b.toDF("sentence").select(F.explode(F.split(F.col("sentence"), " ")).as("word"))
-    def apply(state: MapState[Long], b: Seq[String], txid: Long): Unit =
-      StreamRunner.applyBatch[Long](wordsDF(b), txid, Fields("word"),
-        F.count(F.lit(1)).as("cnt"), _ + _, state)
+      val batches = Seq(
+        Seq("the cat sat", "the dog sat"),
+        Seq("the cat ran"),
+        Seq("a dog barked loudly"))
+      def wordsDF(b: Seq[String]) =
+        b.toDF("sentence").select(F.explode(F.split(F.col("sentence"), " ")).as("word"))
+      def apply(state: MapState[Long], b: Seq[String], txid: Long): Unit =
+        StreamRunner.applyBatch[Long](wordsDF(b), txid, Fields("word"),
+          F.count(F.lit(1)).as("cnt"), _ + _, state)
 
-    MemoryBackingMap.clear("pbm-ref")
-    val mem = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]]("pbm-ref"))
+      MemoryBackingMap.clear("pbm-ref")
+      val mem = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]]("pbm-ref"))
 
-    // batches 0,1 + an opaque replay of 1 with PERTURBED contents
-    val durable1 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-      spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 1))
-    for (s <- Seq(mem, durable1)) {
-      apply(s, batches(0), 0L)
-      apply(s, Seq("the cat NOPE"), 1L) // failed attempt of batch 1
-      apply(s, batches(1), 1L)          // replay with the real contents
-    }
+      // batches 0,1 + an opaque replay of 1 with PERTURBED contents
+      val durable1 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
+        spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 1))
+      for (s <- Seq(mem, durable1)) {
+        apply(s, batches(0), 0L)
+        apply(s, Seq("the cat NOPE"), 1L) // failed attempt of batch 1
+        apply(s, batches(1), 1L)          // replay with the real contents
+      }
 
-    // process restart: drop the in-memory engine, reopen from disk (this
-    // also compacts the WAL into a parquet snapshot: compactAfter=1)
-    ParquetBackingMap.close(dir)
-    val durable2 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-      spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 1))
-    apply(durable2, batches(2), 2L)
-    apply(mem, batches(2), 2L)
+      // process restart: drop the in-memory engine, reopen from disk (this
+      // also compacts the WAL into a parquet snapshot: compactAfter=1)
+      ParquetBackingMap.close(dir)
+      val durable2 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
+        spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 1))
+      apply(durable2, batches(2), 2L)
+      apply(mem, batches(2), 2L)
 
-    // and once more, now loading through the parquet snapshot path
-    ParquetBackingMap.close(dir)
-    val durable3 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-      spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 64))
-    val words = (batches.flatten.flatMap(_.split(" ")) :+ "NOPE").distinct.sorted
-    val keys = words.map(w => Seq[Any](w))
-    val durableCounts = words.zip(durable3.multiGet(keys)).toMap
-    val memCounts = words.zip(mem.multiGet(keys)).toMap
-    assert(durableCounts == memCounts)
-    assert(durableCounts("the") == Some(3L)) // replayed batch counted once, not twice
-    // opaque contract: a key only the FAILED attempt wrote keeps that value
-    // (nothing re-writes it in the replay) — identically on both engines
-    assert(durableCounts("NOPE") == Some(1L))
-    val snaps = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("snap-"))
-    assert(snaps.nonEmpty, "compaction produced no parquet snapshot")
+      // and once more, now loading through the parquet snapshot path
+      ParquetBackingMap.close(dir)
+      val durable3 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
+        spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 64))
+      val words = (batches.flatten.flatMap(_.split(" ")) :+ "NOPE").distinct.sorted
+      val keys = words.map(w => Seq[Any](w))
+      val durableCounts = words.zip(durable3.multiGet(keys)).toMap
+      val memCounts = words.zip(mem.multiGet(keys)).toMap
+      assert(durableCounts == memCounts)
+      assert(durableCounts("the") == Some(3L)) // replayed batch counted once, not twice
+      // opaque contract: a key only the FAILED attempt wrote keeps that value
+      // (nothing re-writes it in the replay) — identically on both engines
+      assert(durableCounts("NOPE") == Some(1L))
+      val snaps = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("snap-"))
+      assert(snaps.nonEmpty, "compaction produced no parquet snapshot")
+      ParquetBackingMap.close(dir)
+    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("ParquetBackingMap: concurrent multiPut from many threads survives restart intact") {
@@ -163,26 +166,28 @@ class StateSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     val dir = java.nio.file.Files.createTempDirectory("graft-pbm-conc").toString
-    val store = ParquetBackingMap.open[String](
-      spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    // 8 writers × 50 puts, each thread owns its key range (the partition
-    // discipline partitionPersist gives executors) — every segment append
-    // races through the shared engine
-    val threads = (0 until 8).map { t =>
-      new Thread(() => (0 until 50).foreach { i =>
-        store.multiPut(Seq(Seq[Any](s"k$t-$i")), Seq(s"v$t-$i"))
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    ParquetBackingMap.close(dir)
-    val reopened = ParquetBackingMap.open[String](
-      spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    val keys = for (t <- 0 until 8; i <- 0 until 50) yield Seq[Any](s"k$t-$i")
-    val got = reopened.multiGet(keys)
-    assert(got.flatten.size == 400, s"lost ${400 - got.flatten.size} of 400 concurrent writes")
-    assert(got.zip(keys).forall { case (v, k) =>
-      v.contains(k.head.toString.replaceFirst("k", "v")) })
-    ParquetBackingMap.close(dir)
+    try {
+      val store = ParquetBackingMap.open[String](
+        spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      // 8 writers × 50 puts, each thread owns its key range (the partition
+      // discipline partitionPersist gives executors) — every segment append
+      // races through the shared engine
+      val threads = (0 until 8).map { t =>
+        new Thread(() => (0 until 50).foreach { i =>
+          store.multiPut(Seq(Seq[Any](s"k$t-$i")), Seq(s"v$t-$i"))
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      ParquetBackingMap.close(dir)
+      val reopened = ParquetBackingMap.open[String](
+        spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      val keys = for (t <- 0 until 8; i <- 0 until 50) yield Seq[Any](s"k$t-$i")
+      val got = reopened.multiGet(keys)
+      assert(got.flatten.size == 400, s"lost ${400 - got.flatten.size} of 400 concurrent writes")
+      assert(got.zip(keys).forall { case (v, k) =>
+        v.contains(k.head.toString.replaceFirst("k", "v")) })
+      ParquetBackingMap.close(dir)
+    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 
   test("ParquetBackingMap: a crash between snapshot-write and segment-delete replays identically (VERDICT r14 #7)") {
@@ -243,21 +248,23 @@ class StateSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     val dir = java.nio.file.Files.createTempDirectory("graft-pbm-boot")
-    // a segment left by a 'previous boot' whose name encodes a huge
-    // timestamp-like number — a clock-derived naming scheme would sort any
-    // post-reboot write BEFORE it and replay stale data on top of new
-    java.nio.file.Files.writeString(dir.resolve(f"seg-${Long.MaxValue / 2}%020d-deadbeef.jsonl"),
-      "[\"k\"]\t[\"old\"]\n")
-    val s1 = ParquetBackingMap.open[String](spark, dir.toString,
-      ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    assert(s1.multiGet(Seq(Seq[Any]("k"))) == Seq(Some("old")))
-    s1.multiPut(Seq(Seq[Any]("k")), Seq("new")) // post-'reboot' write
-    ParquetBackingMap.close(dir.toString)
-    val s2 = ParquetBackingMap.open[String](spark, dir.toString,
-      ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    assert(s2.multiGet(Seq(Seq[Any]("k"))) == Seq(Some("new")),
-      "post-reboot write must replay AFTER the pre-reboot segment")
-    ParquetBackingMap.close(dir.toString)
+    try {
+      // a segment left by a 'previous boot' whose name encodes a huge
+      // timestamp-like number — a clock-derived naming scheme would sort any
+      // post-reboot write BEFORE it and replay stale data on top of new
+      java.nio.file.Files.writeString(dir.resolve(f"seg-${Long.MaxValue / 2}%020d-deadbeef.jsonl"),
+        "[\"k\"]\t[\"old\"]\n")
+      val s1 = ParquetBackingMap.open[String](spark, dir.toString,
+        ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      assert(s1.multiGet(Seq(Seq[Any]("k"))) == Seq(Some("old")))
+      s1.multiPut(Seq(Seq[Any]("k")), Seq("new")) // post-'reboot' write
+      ParquetBackingMap.close(dir.toString)
+      val s2 = ParquetBackingMap.open[String](spark, dir.toString,
+        ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      assert(s2.multiGet(Seq(Seq[Any]("k"))) == Seq(Some("new")),
+        "post-reboot write must replay AFTER the pre-reboot segment")
+      ParquetBackingMap.close(dir.toString)
+    } finally graft.util.Fs.deleteRecursively(dir)
   }
 
   test("DiskBackingMap (r16 bounded-heap tier): roundtrip, overwrite, tombstones, LSM merges, restart replay, crash-window WAL") {
