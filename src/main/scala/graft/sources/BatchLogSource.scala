@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -22,6 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Streaming's offset log plays the role of the coordinator metadata the
   * reference keeps in ZooKeeper (`BatchCoordinator.initializeTransaction`).
   *
+  * A range of n logged batches is read as `min(n, P)` input partitions,
+  * P the session's default parallelism when the query starts — the
+  * spout's `parallelismHint` analog (`Stream.java:76-79`), not one task per
+  * batch the producer happened to log. Each partition is one contiguous
+  * run of batches, so reading the partitions in order yields the range's
+  * rows in log order whatever P is: a restart with another core count
+  * replays the same tuples.
+  *
   * The in-memory batch log is the `IBatchSpout`/`FeederBatchSpout` face for
   * tests; a durable implementation stores batches in files keyed the same
   * way. Usage:
@@ -31,6 +40,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   spark.readStream.format("graft.sources.BatchLogProvider")
   *     .option("log", "mylog").load()   // schema: value STRING
   * }}}
+  * Option `maxBatchesPerTrigger` (a positive integer) caps the logged
+  * batches one trigger admits.
   */
 object BatchLog {
   private val logs = TrieMap[String, ArrayBuffer[Vector[String]]]()
@@ -38,7 +49,11 @@ object BatchLog {
   def append(id: String, batch: Seq[String]): Unit =
     logs(id).synchronized { logs(id) += batch.toVector; () }
   def numBatches(id: String): Int = logs(id).synchronized { logs(id).size }
-  def batch(id: String, i: Int): Vector[String] = logs(id).synchronized { logs(id)(i) }
+  /** The rows of logged batches [from, until), in log order. */
+  def rows(id: String, from: Int, until: Int): Vector[String] = {
+    val log = logs(id)
+    log.synchronized { log.view.slice(from, until).flatten.toVector }
+  }
   def drop(id: String): Unit = { logs.remove(id); () }
 
   val Schema: StructType = StructType(Seq(StructField("value", StringType, nullable = false)))
@@ -58,12 +73,16 @@ private[sources] class BatchLogTable(logId: String) extends Table with SupportsR
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val maxPending = Option(options.get("maxBatchesPerTrigger")).map(_.toInt)
+    val maxPending = Option(options.get("maxBatchesPerTrigger")).map { v =>
+      v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"option 'maxBatchesPerTrigger' must be a positive integer, got '$v'"))
+    }
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = BatchLog.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new BatchLogStream(logId, maxPending)
+          new BatchLogStream(logId, maxPending,
+            SparkSession.active.sparkContext.defaultParallelism)
       }
     }
   }
@@ -73,7 +92,9 @@ private[sources] case class BatchLogOffset(batchId: Long) extends Offset {
   override def json(): String = batchId.toString
 }
 
-private[sources] class BatchLogStream(logId: String, maxBatchesPerTrigger: Option[Int] = None)
+/** @param parallelism the most input partitions one offset range plans. */
+private[sources] class BatchLogStream(logId: String, maxBatchesPerTrigger: Option[Int] = None,
+                                      parallelism: Int = 1)
   extends MicroBatchStream with SupportsAdmissionControl {
   override def initialOffset(): Offset = BatchLogOffset(0L)
   override def latestOffset(): Offset = BatchLogOffset(BatchLog.numBatches(logId).toLong)
@@ -98,11 +119,16 @@ private[sources] class BatchLogStream(logId: String, maxBatchesPerTrigger: Optio
 
   /** The replayability contract: partitions for [start, end) carry the
     * logged batch contents themselves — the same range always yields the
-    * same tuples, even while the log keeps growing. */
+    * same tuples, even while the log keeps growing. The n batches split
+    * into `min(n, parallelism)` contiguous runs whose sizes differ by at
+    * most one; an empty range plans no partition. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[BatchLogOffset].batchId.toInt
-    val e = end.asInstanceOf[BatchLogOffset].batchId.toInt
-    (s until e).map(i => BatchLogPartition(BatchLog.batch(logId, i)): InputPartition).toArray
+    val n = end.asInstanceOf[BatchLogOffset].batchId.toInt - s
+    val k = math.min(n, parallelism)
+    Array.tabulate[InputPartition](k) { j =>
+      BatchLogPartition(BatchLog.rows(logId, s + j * n / k, s + (j + 1) * n / k))
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = BatchLogReaderFactory

@@ -654,14 +654,21 @@ class DRPCServiceSpec extends AnyFunSuite {
       // plain threads, not the global EC — deterministic start under any
       // suite ordering (an EC backed up by earlier suites starved the
       // enqueue and the wait below saw an empty queue)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       val nappers = (1 to 3).map { i =>
         val t = new Thread(() =>
           try svc.execute("napping", s"s$i")
           catch { case _: Throwable => () }, s"drpc-fast-napper-$i")
-        t.start(); t
+        t.start()
+        // the worker claims the first before the others arrive: were all
+        // three queued at once, the third would be refused (the bound
+        // counts queued requests) and the queue would hold 2 only until
+        // the first claim
+        if (i == 1) while ((svc.pendingCount < 1 || svc.queuedCount > 0) &&
+            System.nanoTime() < deadline) Thread.sleep(1)
+        t
       }
       // wait until the backlog is actually full (1 claimed + 2 queued)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (svc.queuedCount < 2 && System.nanoTime() < deadline) Thread.sleep(10)
       assert(svc.queuedCount >= 2, "queue never filled")
       intercept[DRPCExecutionException] { svc.execute("wordlen", "overflow") }

@@ -21,32 +21,34 @@ class IncrementalSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("AvailableNow + checkpoint processes each file drop exactly once") {
-    val in = java.nio.file.Files.createTempDirectory("inc-in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("inc-ck").toString
-    val seen = scala.collection.mutable.Buffer[Long]()
+    TempDirs.withTempDir("inc-in") { inDir => TempDirs.withTempDir("inc-ck") { ckDir =>
+      val in = inDir.toString
+      val ckpt = ckDir.toString
+      val seen = scala.collection.mutable.Buffer[Long]()
 
-    def runOnce(): Unit = {
-      val q = graft.sources.Sources.parquetStream(spark, in)
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          seen.synchronized { seen ++= b.select("id").collect().map(_.getLong(0)) }; ()
-        }
-        .start()
-      q.awaitTermination()
-    }
+      def runOnce(): Unit = {
+        val q = graft.sources.Sources.parquetStream(spark, in)
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            seen.synchronized { seen ++= b.select("id").collect().map(_.getLong(0)) }; ()
+          }
+          .start()
+        q.awaitTermination()
+      }
 
-    Seq(1L, 2L).toDF("id").write.mode("append").parquet(in)
-    runOnce()
-    assert(seen.sorted == Seq(1L, 2L))
+      Seq(1L, 2L).toDF("id").write.mode("append").parquet(in)
+      runOnce()
+      assert(seen.sorted == Seq(1L, 2L))
 
-    Seq(3L).toDF("id").write.mode("append").parquet(in)
-    runOnce() // second run: ONLY the new file
-    assert(seen.sorted == Seq(1L, 2L, 3L))
+      Seq(3L).toDF("id").write.mode("append").parquet(in)
+      runOnce() // second run: ONLY the new file
+      assert(seen.sorted == Seq(1L, 2L, 3L))
 
-    runOnce() // nothing new: no reprocessing
-    assert(seen.sorted == Seq(1L, 2L, 3L))
+      runOnce() // nothing new: no reprocessing
+      assert(seen.sorted == Seq(1L, 2L, 3L))
+    }}
   }
 
   test("streaming progress exposes per-batch input row counts (metrics surface)") {

@@ -40,19 +40,20 @@ class MiscSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("name", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("srcfmt")
-    java.nio.file.Files.writeString(dir.resolve("a.csv"), "id,name\n1,alpha\n2,beta\nnot_a_long,gamma\n")
-    java.nio.file.Files.writeString(dir.resolve("b.jsonl"), """{"id":3,"name":"c"}""" + "\n" + """{"id":4,"name":"d"}""" + "\n")
+    TempDirs.withTempDir("srcfmt") { dir =>
+      java.nio.file.Files.writeString(dir.resolve("a.csv"), "id,name\n1,alpha\n2,beta\nnot_a_long,gamma\n")
+      java.nio.file.Files.writeString(dir.resolve("b.jsonl"), """{"id":3,"name":"c"}""" + "\n" + """{"id":4,"name":"d"}""" + "\n")
 
-    val c = graft.sources.Sources.csv(spark, dir.resolve("a.csv").toString, schema)
-    assert(c.where(F.col("id").isNotNull).count() == 2)   // malformed row survives as nulls
-    assert(c.count() == 3)
-    val j = graft.sources.Sources.jsonl(spark, dir.resolve("b.jsonl").toString, schema)
-    assert(j.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+      val c = graft.sources.Sources.csv(spark, dir.resolve("a.csv").toString, schema)
+      assert(c.where(F.col("id").isNotNull).count() == 2)   // malformed row survives as nulls
+      assert(c.count() == 3)
+      val j = graft.sources.Sources.jsonl(spark, dir.resolve("b.jsonl").toString, schema)
+      assert(j.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
 
-    // streaming face: same schema, incremental file listing
-    val s = graft.sources.Sources.jsonl(spark, dir.resolve("*.jsonl").toString, schema, streaming = true)
-    assert(s.isStreaming)
+      // streaming face: same schema, incremental file listing
+      val s = graft.sources.Sources.jsonl(spark, dir.resolve("*.jsonl").toString, schema, streaming = true)
+      assert(s.isStreaming)
+    }
   }
 
   test("FeederSource feeds discrete micro-batches (FeederBatchSpout analog)") {

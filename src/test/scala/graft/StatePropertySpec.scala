@@ -83,75 +83,78 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
   property("ParquetBackingMap ≡ MemoryBackingMap for any batch/replay/restart sequence") =
     Prop.forAll(Gen.listOfN(10, opGen)) { ops =>
       val memId = s"pbmprop-${java.util.UUID.randomUUID()}"
-      val dir = java.nio.file.Files.createTempDirectory("pbmprop").toString
-      val mem = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]](memId))
-      def openDurable() = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-        propSpark, dir, ParquetBackingMap.opaqueCodec, compactAfter = Int.MaxValue))
-      var durable = openDurable()
-      ops.zipWithIndex.foreach { case (op, txid) =>
-        if (op.restartBefore) { // process dies between batches, WAL replays
-          ParquetBackingMap.close(dir)
-          durable = openDurable()
-        }
-        val k = Seq(Seq[Any](op.key))
-        for (m <- Seq(mem, durable)) {
-          if (op.failedFirst) { // a differing failed attempt, then the real one
-            m.beginCommit(Some(txid.toLong))
-            m.multiUpdate(k, Seq(count(op.partial + 100)))
+      TempDirs.withTempDir("pbmprop") { path =>
+        val dir = path.toString
+        val mem = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]](memId))
+        def openDurable() = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
+          propSpark, dir, ParquetBackingMap.opaqueCodec, compactAfter = Int.MaxValue))
+        var durable = openDurable()
+        ops.zipWithIndex.foreach { case (op, txid) =>
+          if (op.restartBefore) { // process dies between batches, WAL replays
+            ParquetBackingMap.close(dir)
+            durable = openDurable()
           }
-          m.beginCommit(Some(txid.toLong))
-          m.multiUpdate(k, Seq(count(op.partial)))
-          m.commit(Some(txid.toLong))
+          val k = Seq(Seq[Any](op.key))
+          for (m <- Seq(mem, durable)) {
+            if (op.failedFirst) { // a differing failed attempt, then the real one
+              m.beginCommit(Some(txid.toLong))
+              m.multiUpdate(k, Seq(count(op.partial + 100)))
+            }
+            m.beginCommit(Some(txid.toLong))
+            m.multiUpdate(k, Seq(count(op.partial)))
+            m.commit(Some(txid.toLong))
+          }
         }
+        val keys = Seq("a", "b", "c").map(x => Seq[Any](x))
+        val got = durable.multiGet(keys)
+        val want = mem.multiGet(keys)
+        MemoryBackingMap.clear(memId)
+        ParquetBackingMap.close(dir)
+        Prop(got == want) :| s"durable $got vs memory $want"
       }
-      val keys = Seq("a", "b", "c").map(x => Seq[Any](x))
-      val got = durable.multiGet(keys)
-      val want = mem.multiGet(keys)
-      MemoryBackingMap.clear(memId)
-      ParquetBackingMap.close(dir)
-      Prop(got == want) :| s"durable $got vs memory $want"
     }
 
   property("IncrementalClusters over DiskBackingMap == over MemoryBackingMap for any batched edge stream; fold laws hold; mid-stream restart is lossless (r16)") =
     Prop.forAll(Gen.listOfN(4, Gen.listOf(
         Gen.zip(Gen.choose(0L, 12L), Gen.choose(0L, 12L))))) { batches =>
       val id = s"prop-disk-${java.util.UUID.randomUUID()}"
-      val dir = java.nio.file.Files.createTempDirectory("prop-disk").toString
-      val memInc = graft.streaming.IncrementalClusters.inMemory(id)
-      // flushAfterKeys=4: every batch crosses flush/merge boundaries
-      var diskInc = graft.streaming.IncrementalClusters.durableDisk(dir,
-        flushAfterKeys = 4)
-      var diskParents = new CountingMapState(diskInc.parents)
-      def q(n: Long): Double = ((n * 3) % 7).toDouble
-      val ok = batches.zipWithIndex.forall { case (es0, txid) =>
-        val es = es0.filter(e => e._1 != e._2).distinct
-        val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct
-        val quals = endpoints.map(n => n -> ((q(n), n))).toMap
-        diskParents.resetCounts()
-        val (memOut, memBest) =
-          memInc.foldEdges(es.toArray, memInc.parents, quals, txid.toLong)
-        val (diskOut, diskBest) =
-          diskInc.foldEdges(es.toArray, diskParents, quals, txid.toLong)
-        val emitOk = diskOut == memOut && diskBest == memBest
-        val lawOk = diskParents.putKeys.subsetOf(diskParents.getKeys)
-        val storedOk = diskInc.parents.scanAll().toMap ==
-          memInc.parents.scanAll().toMap
-        // process restart between batches: reopen from disk
-        graft.streaming.IncrementalClusters.closeDurableDisk(dir)
-        diskInc = graft.streaming.IncrementalClusters.durableDisk(dir,
+      TempDirs.withTempDir("prop-disk") { path =>
+        val dir = path.toString
+        val memInc = graft.streaming.IncrementalClusters.inMemory(id)
+        // flushAfterKeys=4: every batch crosses flush/merge boundaries
+        var diskInc = graft.streaming.IncrementalClusters.durableDisk(dir,
           flushAfterKeys = 4)
-        diskParents = new CountingMapState(diskInc.parents)
-        val restartOk = diskInc.parents.scanAll().toMap ==
-          memInc.parents.scanAll().toMap
-        if (!(emitOk && lawOk && storedOk && restartOk))
-          println(s"FAIL disk-vs-mem batch=$es emit=$emitOk law=$lawOk " +
-            s"stored=$storedOk restart=$restartOk")
-        emitOk && lawOk && storedOk && restartOk
+        var diskParents = new CountingMapState(diskInc.parents)
+        def q(n: Long): Double = ((n * 3) % 7).toDouble
+        val ok = batches.zipWithIndex.forall { case (es0, txid) =>
+          val es = es0.filter(e => e._1 != e._2).distinct
+          val endpoints = es.flatMap(e => Seq(e._1, e._2)).distinct
+          val quals = endpoints.map(n => n -> ((q(n), n))).toMap
+          diskParents.resetCounts()
+          val (memOut, memBest) =
+            memInc.foldEdges(es.toArray, memInc.parents, quals, txid.toLong)
+          val (diskOut, diskBest) =
+            diskInc.foldEdges(es.toArray, diskParents, quals, txid.toLong)
+          val emitOk = diskOut == memOut && diskBest == memBest
+          val lawOk = diskParents.putKeys.subsetOf(diskParents.getKeys)
+          val storedOk = diskInc.parents.scanAll().toMap ==
+            memInc.parents.scanAll().toMap
+          // process restart between batches: reopen from disk
+          graft.streaming.IncrementalClusters.closeDurableDisk(dir)
+          diskInc = graft.streaming.IncrementalClusters.durableDisk(dir,
+            flushAfterKeys = 4)
+          diskParents = new CountingMapState(diskInc.parents)
+          val restartOk = diskInc.parents.scanAll().toMap ==
+            memInc.parents.scanAll().toMap
+          if (!(emitOk && lawOk && storedOk && restartOk))
+            println(s"FAIL disk-vs-mem batch=$es emit=$emitOk law=$lawOk " +
+              s"stored=$storedOk restart=$restartOk")
+          emitOk && lawOk && storedOk && restartOk
+        }
+        graft.streaming.IncrementalClusters.closeDurableDisk(dir)
+        graft.streaming.IncrementalClusters.clearInMemory(id)
+        Prop(ok)
       }
-      graft.streaming.IncrementalClusters.closeDurableDisk(dir)
-      graft.streaming.IncrementalClusters.clearInMemory(id)
-      graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
-      Prop(ok)
     }
 
   property("IncrementalClusters.foldEdges: arbitrary batched edge streams — stored chains resolve to the reference union-find; emissions are exactly endpoints + root-change records; puts touch only read keys; replay is a state no-op") =

@@ -809,44 +809,46 @@ class StateStoreSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.state._
-    val ck = java.nio.file.Files.createTempDirectory("tws-restart").toString
-    val input = MemoryStream[String]
-    StateStoreSpec.restartSink.clear()
-    def startQuery() =
-      StateStoreRunner.runningCount[String, String](
-          input.toDS().flatMap(_.split(" ")), identity)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ck)   // memory sink can't recover; foreachBatch can
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[(String, Long)], _: Long) =>
-          batch.collect().foreach { case (k, n) => StateStoreSpec.restartSink.put(k, n); () }
-        }
-        .trigger(Trigger.ProcessingTime(0L))
-        .start()
+    TempDirs.withTempDir("tws-restart") { ckDir =>
+      val ck = ckDir.toString
+      val input = MemoryStream[String]
+      StateStoreSpec.restartSink.clear()
+      def startQuery() =
+        StateStoreRunner.runningCount[String, String](
+            input.toDS().flatMap(_.split(" ")), identity)
+          .writeStream.outputMode("update")
+          .option("checkpointLocation", ck)   // memory sink can't recover; foreachBatch can
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[(String, Long)], _: Long) =>
+            batch.collect().foreach { case (k, n) => StateStoreSpec.restartSink.put(k, n); () }
+          }
+          .trigger(Trigger.ProcessingTime(0L))
+          .start()
 
-    val q1 = startQuery()
-    input.addData("the man said the word")
-    q1.processAllAvailable()
-    q1.stop()                       // kill mid-stream
-    input.addData("the man on the moon")
-    val q2 = startQuery()           // restart from the checkpoint
-    q2.processAllAvailable()
-    q2.stop()
+      val q1 = startQuery()
+      input.addData("the man said the word")
+      q1.processAllAvailable()
+      q1.stop()                       // kill mid-stream
+      input.addData("the man on the moon")
+      val q2 = startQuery()           // restart from the checkpoint
+      q2.processAllAvailable()
+      q2.stop()
 
-    import scala.jdk.CollectionConverters._
-    val storeCounts: Map[String, Long] = StateStoreSpec.restartSink.asScala.toMap
-      .map { case (k, v) => k -> v.longValue() }
+      import scala.jdk.CollectionConverters._
+      val storeCounts: Map[String, Long] = StateStoreSpec.restartSink.asScala.toMap
+        .map { case (k, v) => k -> v.longValue() }
 
-    // the SAME stream of words through the external-MapState tier
-    // (StreamRunner.applyBatch with an OpaqueMap) must agree key-for-key
-    MemoryBackingMap.clear("tws-vs-map")
-    val map = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]]("tws-vs-map"))
-    val words = "the man said the word the man on the moon".split(" ").toSeq.toDF("word")
-    graft.streaming.StreamRunner.applyBatch[Long](words, 0L, graft.api.Fields("word"),
-      F.count(F.lit(1)).as("cnt"), _ + _, map)
-    val mapCounts = MemoryBackingMap.snapshot[OpaqueValue[Long]]("tws-vs-map")
-      .map { case (k, v) => k.head.toString -> v.curr }
-    assert(storeCounts == mapCounts)
-    assert(storeCounts("the") == 4L)
+      // the SAME stream of words through the external-MapState tier
+      // (StreamRunner.applyBatch with an OpaqueMap) must agree key-for-key
+      MemoryBackingMap.clear("tws-vs-map")
+      val map = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]]("tws-vs-map"))
+      val words = "the man said the word the man on the moon".split(" ").toSeq.toDF("word")
+      graft.streaming.StreamRunner.applyBatch[Long](words, 0L, graft.api.Fields("word"),
+        F.count(F.lit(1)).as("cnt"), _ + _, map)
+      val mapCounts = MemoryBackingMap.snapshot[OpaqueValue[Long]]("tws-vs-map")
+        .map { case (k, v) => k.head.toString -> v.curr }
+      assert(storeCounts == mapCounts)
+      assert(storeCounts("the") == 4L)
+    }
   }
 
   test("value-generic state: (count, max) tuple fold per key") {
@@ -1071,34 +1073,36 @@ class StateStoreSpec extends AnyFunSuite {
   test("streaming shard plan kill/restart: offsets resume from the checkpoint, no gap or double-count") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ck = java.nio.file.Files.createTempDirectory("tws-shard-restart").toString
-    val input = MemoryStream[(Long, String, String)]
-    val sink = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, (Long, Long)]()
-    def startQuery() =
-      functions.Sampling.streamingShardPlan(
-          input.toDF().toDF("doc_id", "source", "text"),
-          "doc_id", "text", "source", targetTokens = 5L)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach { r =>
-            sink.put(r.getLong(1), (r.getLong(3), r.getLong(4))); () }
-        }
-        .trigger(Trigger.ProcessingTime(0L))
-        .start()
+    TempDirs.withTempDir("tws-shard-restart") { ckDir =>
+      val ck = ckDir.toString
+      val input = MemoryStream[(Long, String, String)]
+      val sink = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, (Long, Long)]()
+      def startQuery() =
+        functions.Sampling.streamingShardPlan(
+            input.toDF().toDF("doc_id", "source", "text"),
+            "doc_id", "text", "source", targetTokens = 5L)
+          .writeStream.outputMode("append")
+          .option("checkpointLocation", ck)
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+            batch.collect().foreach { r =>
+              sink.put(r.getLong(1), (r.getLong(3), r.getLong(4))); () }
+          }
+          .trigger(Trigger.ProcessingTime(0L))
+          .start()
 
-    val q1 = startQuery()
-    input.addData((1L, "A", "a b c"), (2L, "A", "d e f g")) // A ends at offset 7
-    q1.processAllAvailable()
-    q1.stop()                          // kill mid-stream
-    input.addData((3L, "A", "h i"))    // must resume at 7, not 0
-    val q2 = startQuery()
-    q2.processAllAvailable()
-    q2.stop()
+      val q1 = startQuery()
+      input.addData((1L, "A", "a b c"), (2L, "A", "d e f g")) // A ends at offset 7
+      q1.processAllAvailable()
+      q1.stop()                          // kill mid-stream
+      input.addData((3L, "A", "h i"))    // must resume at 7, not 0
+      val q2 = startQuery()
+      q2.processAllAvailable()
+      q2.stop()
 
-    import scala.jdk.CollectionConverters._
-    val got = sink.asScala.map { case (k, v) => k.longValue() -> v }.toMap
-    assert(got == Map(1L -> ((0L, 0L)), 2L -> ((3L, 0L)), 3L -> ((7L, 1L))))
+      import scala.jdk.CollectionConverters._
+      val got = sink.asScala.map { case (k, v) => k.longValue() -> v }.toMap
+      assert(got == Map(1L -> ((0L, 0L)), 2L -> ((3L, 0L)), 3L -> ((7L, 1L))))
+    }
   }
 
   test("streaming confusion monitor matches the batch binaryEval counts per slice") {

@@ -226,24 +226,26 @@ class StreamApiSpec extends AnyFunSuite {
 
   test("split: one scan feeds three branches, first matching predicate wins") {
     // write the source to parquet so "one scan" is observable in the plans
-    val dir = java.nio.file.Files.createTempDirectory("split-src").toString
-    (1 to 10).toDF("n").write.mode("overwrite").parquet(dir)
-    val src = new Stream(spark.read.parquet(dir))
-    val branches = src.split($"n" <= 3, $"n" % 2 === 0, F.lit(true))
-    val Seq(small, even, rest) = branches
-    // 3 sinks drain the 3 branches
-    val sunk = branches.map(_.toDF.as[Int].collect().toSet)
-    assert(sunk(0) == Set(1, 2, 3))
-    assert(sunk(1) == Set(4, 6, 8, 10))       // 2 matched branch 0 first
-    assert(sunk(2) == Set(5, 7, 9))
-    // single scan: every branch reads the shared cached materialization,
-    // not the parquet source
-    branches.foreach { b =>
-      val p = b.toDF.queryExecution.executedPlan.toString
-      assert(p.contains("InMemoryTableScan"), s"branch rescans the source:\n$p")
+    TempDirs.withTempDir("split-src") { path =>
+      val dir = path.toString
+      (1 to 10).toDF("n").write.mode("overwrite").parquet(dir)
+      val src = new Stream(spark.read.parquet(dir))
+      val branches = src.split($"n" <= 3, $"n" % 2 === 0, F.lit(true))
+      val Seq(small, even, rest) = branches
+      // 3 sinks drain the 3 branches
+      val sunk = branches.map(_.toDF.as[Int].collect().toSet)
+      assert(sunk(0) == Set(1, 2, 3))
+      assert(sunk(1) == Set(4, 6, 8, 10))       // 2 matched branch 0 first
+      assert(sunk(2) == Set(5, 7, 9))
+      // single scan: every branch reads the shared cached materialization,
+      // not the parquet source
+      branches.foreach { b =>
+        val p = b.toDF.queryExecution.executedPlan.toString
+        assert(p.contains("InMemoryTableScan"), s"branch rescans the source:\n$p")
+      }
+      small.unpersistSplit()
+      assert(even.toDF.count() == 4 && rest.toDF.count() == 3) // still correct uncached
     }
-    small.unpersistSplit()
-    assert(even.toDF.count() == 4 && rest.toDF.count() == 3) // still correct uncached
   }
 
   test("multiReduce cogroups two streams per key") {

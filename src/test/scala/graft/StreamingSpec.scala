@@ -144,20 +144,22 @@ class StreamingSpec extends AnyFunSuite {
 
   test("exactly-once parquet sink: batch replay overwrites, never duplicates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("eo-sink").toString
-    // batch 0, then batch 1 (a partial attempt), then batch 1 replayed with
-    // the full data — the recovering-query pattern
-    graft.streaming.StreamRunner.exactlyOnceParquetBatch(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L, dir)
-    graft.streaming.StreamRunner.exactlyOnceParquetBatch(
-      Seq((3L, "partial")).toDF("id", "v"), 1L, dir)
-    graft.streaming.StreamRunner.exactlyOnceParquetBatch(
-      Seq((3L, "c"), (4L, "d")).toDF("id", "v"), 1L, dir)
-    val rows = spark.read.parquet(dir)
-      .select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
-    // and batch 0's output was untouched by batch 1's overwrite
-    assert(spark.read.parquet(dir).where(F.col("__batch_id") === 0).count() == 2)
+    TempDirs.withTempDir("eo-sink") { path =>
+      val dir = path.toString
+      // batch 0, then batch 1 (a partial attempt), then batch 1 replayed with
+      // the full data — the recovering-query pattern
+      graft.streaming.StreamRunner.exactlyOnceParquetBatch(
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L, dir)
+      graft.streaming.StreamRunner.exactlyOnceParquetBatch(
+        Seq((3L, "partial")).toDF("id", "v"), 1L, dir)
+      graft.streaming.StreamRunner.exactlyOnceParquetBatch(
+        Seq((3L, "c"), (4L, "d")).toDF("id", "v"), 1L, dir)
+      val rows = spark.read.parquet(dir)
+        .select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+      // and batch 0's output was untouched by batch 1's overwrite
+      assert(spark.read.parquet(dir).where(F.col("__batch_id") === 0).count() == 2)
+    }
   }
 
   test("rolling top words: sliding-window counts + native topK per window") {
