@@ -753,16 +753,19 @@ object Bench {
         () => MemoryBackingMap.clear("bench-wc"))
     }
 
-  /** Same topology on the DURABLE backing-map tier (`ParquetBackingMap`:
-    * WAL segment per batch + snapshot compaction) — records what the
-    * write-ahead persistence costs over the in-memory SPI map. */
+  /** Same topology on the DURABLE backing-map tier (`DiskBackingMap`:
+    * WAL segment per batch + memtable flushes into sorted runs) — records
+    * what the write-ahead persistence costs over the in-memory SPI map. */
   private def streamingWordCountDurable(spark: SparkSession, sfDir: String): (String, Double) =
     applyBatchWordCount(spark, sfDir, "stream_wordcount_durable") { () =>
       import graft.state._
       val dir = java.nio.file.Files.createTempDirectory("bench-wc-durable").toString
-      (new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-          spark, dir, ParquetBackingMap.opaqueCodec)),
-        () => ParquetBackingMap.close(dir))
+      (new OpaqueMap[Long](DiskBackingMap.open[OpaqueValue[Long]](
+          dir, DiskBackingMap.opaqueCodec)),
+        () => {
+          DiskBackingMap.close(dir)
+          graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+        })
     }
 
   /** The shared applyBatch drive: 4 micro-batch slices of the replicated

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable exactly-once FILE sink: manifest-committed parquet batches —
-  * the disk tier of sink parity, as [[graft.state.ParquetBackingMap]] is to
+  * the disk tier of sink parity, as [[graft.state.DiskBackingMap]] is to
   * `MemoryBackingMap` on the state side and [[KvStoreSink]] is on the
   * in-memory sink side.
   *
@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    executors do the IO; nothing collects to the driver).
   *  - commit: `dir/_manifest/<id>` (attempt dir name inside), written to a
   *    temp name then ATOMIC_MOVE'd — the rename is the all-or-nothing
-  *    commit, exactly like the WAL segment rename in `ParquetBackingMap`.
+  *    commit, exactly like the WAL segment rename in `DiskBackingMap`.
   *  - replay: a manifest for `batchId` already present → the write is
   *    skipped (the reference's skip-if-committed tier). The replayed
   *    attempt's directory is never created.

@@ -1,6 +1,7 @@
 package graft.state
 
-import java.nio.charset.StandardCharsets
+import java.io.BufferedReader
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -8,49 +9,59 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
-/** BOUNDED-HEAP durable `IBackingMap`: the key universe lives ON DISK in
-  * size-tiered sorted runs (a small LSM); the heap holds only
+/** The engine's durable `IBackingMap` — what the reference's MapState SPI
+  * exists to plug (`state/map/IBackingMap.java:23`: Cassandra/Memcached in
+  * practice; here a filesystem store with the same multiGet/multiPut
+  * contract), making `partitionPersist`/`persistentAggregate` state survive
+  * process restarts. The key universe lives ON DISK in size-tiered sorted
+  * runs (a small LSM); the heap holds only
   *
   *  - the memtable (writes since the last flush, capped at
   *    `flushAfterKeys`),
-  *  - one sparse index entry per `indexEvery` keys per run
-  *    (~keys/indexEvery strings),
-  *  - a per-run Bloom filter (`bloomBitsPerKey` bits/key — probes that
-  *    would miss skip the disk read), and
-  *  - an LRU block cache (`cacheBlocks` parsed blocks) — the reference's
-  *    `CachedMap.java:31-70` read-cache discipline in front of a disk
-  *    store, fused into the store.
+  *  - one sparse index entry per 64 keys per run,
+  *  - a per-run Bloom filter (8 bits/key — probes that would miss skip the
+  *    disk read), and
+  *  - an LRU block cache (2048 parsed blocks of 64 entries) —
+  *    the reference's `CachedMap.java:31-70` read-cache discipline in front
+  *    of a disk store, fused into the store.
   *
-  * This is the scale tier VERDICT r15 #1 asked for: the streaming
-  * dup-clusters `parents` map keys EVERY id ever seen — corpus-sized at
-  * 100 TB — and both prior backings ([[MemoryBackingMap]],
-  * [[ParquetBackingMap]]) materialize the full key universe in one JVM
-  * heap. Here resident memory is O(flushAfterKeys + keys/indexEvery +
-  * keys·bloomBitsPerKey/8 + cacheBlocks·indexEvery) — ~2 bytes/key at
-  * the defaults, 100× under full residency — and per-batch fold cost
-  * stays O(touched keys) (drilled at 10⁷–10⁸ keys under a pinned -Xmx:
-  * `graft.tools.DiskMapDrill`). On a cluster, one such store per state
-  * partition behind `MicroBatchIBackingMap` chunking is the
-  * reference's external-store deployment shape (`IBackingMap.java:23`).
+  * Resident memory is O(flushAfterKeys + keys/64) — ~2 bytes/key, 100×
+  * under full residency — and per-batch fold cost stays O(touched keys)
+  * (drilled at 10⁷–10⁸ keys under a pinned -Xmx: `graft.tools.DiskMapDrill`):
+  * the streaming dup-clusters `parents` map keys EVERY id ever seen.
   *
-  * Durability = the same WAL discipline as [[ParquetBackingMap]]: every
-  * `multiPut`/`multiRemove` appends one atomic `seg-*.jsonl` segment
-  * (temp write + rename, seq seeded past existing segments) BEFORE the
-  * memtable mutates; `open()` replays live segments. Sorted runs are
-  * written temp → fsync → atomic rename, and become visible only via the
-  * `MANIFEST` (itself atomically replaced), so every crash window leaves
-  * either the old or the new file set — orphan runs are swept at open.
-  * A flush folds the memtable into a new head run and deletes its WAL
-  * segments; adjacent runs merge whenever a run reaches half its older
-  * neighbor (each run ≥2× the next newer ⟹ ≤ log₂(keys/flushAfterKeys)
-  * runs, O(log) write amplification). Tombstones ([[multiRemove]])
-  * persist through merges until the oldest run participates, then drop.
+  * Layout under `path`:
+  *  - `seg-<seq>-<uuid>.jsonl` — the write-ahead log: one segment per
+  *    `multiPut`/`multiRemove` (tab-separated `key\tvalue` JSON pairs),
+  *    published BEFORE the memtable mutates; `open()` seeds the sequence
+  *    past every segment and every folded sequence, so replay order
+  *    survives reboots (one writer per directory).
+  *  - `run-<n>.tsv` — sorted `key\tvalue` runs.
+  *  - `MANIFEST` — the highest WAL sequence folded into runs, then one
+  *    `name\tkeyCount` line per live run, newest first. Runs are visible
+  *    only through it.
+  *
+  * Every file is published the same way: temp write, fsync, atomic
+  * rename, directory fsync — so each crash window leaves the old or the new
+  * file set, and no acknowledged write is lost. A flush writes the memtable
+  * as a new head run, then the MANIFEST (the run and the folded sequence
+  * in one atomic replace), then deletes the folded segments; `open()`
+  * deletes, never replays, a segment at or below the folded sequence (a
+  * lost delete cannot shadow newer values) and sweeps orphan runs. Adjacent
+  * runs merge whenever a run reaches half its older neighbor (each run ≥2×
+  * the next newer ⟹ ≤ log₂(keys/flushAfterKeys) runs, O(log) write
+  * amplification). Tombstones ([[multiRemove]]) persist through merges
+  * until the oldest run participates, then drop. Flush and merge are pure
+  * file I/O, safe from ANY thread, executor tasks included.
   *
   * Exactly-once correctness under replay is the WRAPPER's job (the
   * Opaque/Transactional tiers store txids in the value), exactly as with
-  * any external store. Flush/merge are pure file I/O — safe from ANY
-  * thread, including executor tasks (no Spark job is launched, unlike
-  * [[ParquetBackingMap]] compaction).
+  * any external store; a re-written key lands in a later segment and wins.
+  *
+  * Handles resolve through a process-wide registry, so `local[n]` executor
+  * threads share one engine. On a cluster, one such store per state
+  * partition behind `MicroBatchIBackingMap` chunking is the reference's
+  * external-store deployment shape.
   */
 final class DiskBackingMap[T] private (path: String)
   extends IBackingMap[T] with ScannableBacking with CommitAwareBacking
@@ -62,12 +73,14 @@ final class DiskBackingMap[T] private (path: String)
   def multiPut(keys: Seq[Seq[Any]], vals: Seq[T]): Unit =
     engine.append(keys.map(StateSerializers.keyToJson)
       .zip(vals.map(v => engine.encode(v.asInstanceOf[Any]))))
+  /** Key deletion via WAL tombstones: a reserved one-char value marks the
+    * key dead (values are JSON-coded and can never collide with it). */
   def multiRemove(keys: Seq[Seq[Any]]): Unit =
     engine.append(keys.map(k =>
       (StateSerializers.keyToJson(k), DiskBackingMap.Tombstone)))
-  /** Commit hook: bound WAL replay length by flushing a grown memtable at
-    * batch boundaries (flush also runs inline once `flushAfterKeys` is
-    * exceeded mid-batch). */
+  /** Commit hook: bound WAL replay length by flushing once the WAL passes
+    * `compactAfter` segments (flush also runs inline once `flushAfterKeys`
+    * is exceeded mid-batch). */
   def onCommit(): Unit = engine.onCommit()
   /** Full scan — streams the merged runs; the returned Seq is the whole
     * key universe, so this face is for SMALL stores and parity specs.
@@ -79,171 +92,206 @@ final class DiskBackingMap[T] private (path: String)
 }
 
 object DiskBackingMap {
-  /** Tombstone value — same reserved char as [[ParquetBackingMap]]. */
-  private[state] val Tombstone: String = ParquetBackingMap.Tombstone
+  /** Value codec: JSON string ↔ value, matching the reference's JSON state
+    * serializers. */
+  final case class Codec(encode: Any => String, decode: String => Any)
+
+  val opaqueCodec: Codec = Codec(
+    v => StateSerializers.opaqueToJson(v.asInstanceOf[OpaqueValue[Any]]),
+    StateSerializers.opaqueFromJson)
+  val transactionalCodec: Codec = Codec(
+    v => StateSerializers.transactionalToJson(v.asInstanceOf[TransactionalValue[Any]]),
+    StateSerializers.transactionalFromJson)
+  val nonTransactionalCodec: Codec = Codec(
+    StateSerializers.nonTransactionalToJson, StateSerializers.nonTransactionalFromJson)
+
+  /** WAL tombstone value (never a legal JSON-coded value): marks a key
+    * removed. */
+  private[state] val Tombstone: String = "\u0000"
+
+  /** Keys per sparse-index entry, i.e. per cached block. */
+  private val IndexEvery = 64
+  /** Parsed blocks the LRU cache holds per store. */
+  private val CacheBlocks = 2048
+  private val BloomBitsPerKey = 8
 
   /** One sorted run on disk + its in-heap probes. */
   private final class Run(val file: Path, val count: Long,
       val indexKeys: Array[String], val indexOffsets: Array[Long],
       val bloomBits: Array[Long]) {
-    def mightContain(k: String): Boolean = {
-      if (bloomBits.length == 0) return true
-      val h1 = scala.util.hashing.MurmurHash3.stringHash(k, 0x9747b28c)
-      val h2 = scala.util.hashing.MurmurHash3.stringHash(k, 0x85ebca6b)
-      val m = bloomBits.length.toLong * 64L
-      var i = 0
-      while (i < 4) {
-        val bit = java.lang.Math.floorMod(h1.toLong + i.toLong * h2.toLong, m)
-        if ((bloomBits((bit >>> 6).toInt) & (1L << (bit & 63))) == 0L)
-          return false
-        i += 1
-      }
-      true
-    }
+    def mightContain(k: String): Boolean = Bloom.probe(bloomBits, k, add = false)
   }
 
   private object Bloom {
-    def alloc(expected: Long, bitsPerKey: Int): Array[Long] =
-      if (bitsPerKey <= 0) Array.emptyLongArray
-      else new Array[Long](
-        math.max(1L, (expected * bitsPerKey + 63) / 64).min(1L << 28).toInt)
-    def add(bits: Array[Long], k: String): Unit = {
-      if (bits.length == 0) return
+    def alloc(expected: Long): Array[Long] = new Array[Long](
+      math.max(1L, (expected * BloomBitsPerKey + 63) / 64).min(1L << 28).toInt)
+    /** Set k's four bits (`add`), or report whether all four are set. */
+    def probe(bits: Array[Long], k: String, add: Boolean): Boolean = {
       val h1 = scala.util.hashing.MurmurHash3.stringHash(k, 0x9747b28c)
       val h2 = scala.util.hashing.MurmurHash3.stringHash(k, 0x85ebca6b)
       val m = bits.length.toLong * 64L
       var i = 0
       while (i < 4) {
         val bit = java.lang.Math.floorMod(h1.toLong + i.toLong * h2.toLong, m)
-        bits((bit >>> 6).toInt) |= (1L << (bit & 63))
+        val mask = 1L << (bit & 63)
+        if (add) bits((bit >>> 6).toInt) |= mask
+        else if ((bits((bit >>> 6).toInt) & mask) == 0L) return false
         i += 1
       }
+      true
     }
   }
 
-  private[state] final class Engine(val dir: Path, codec: ParquetBackingMap.Codec,
-      flushAfterKeys: Int, indexEvery: Int, cacheBlocks: Int,
-      bloomBitsPerKey: Int, compactAfter: Int) {
+  /** A run's probes, built while its lines are written or read in order. */
+  private final class Probes(expected: Long) {
+    private val keys = Vector.newBuilder[String]
+    private val offsets = Vector.newBuilder[Long]
+    private val bloom = Bloom.alloc(expected)
+    private var count = 0L
+    private var offset = 0L
+    def add(k: String, lineBytes: Long): Unit = {
+      if (count % IndexEvery == 0) { keys += k; offsets += offset }
+      Bloom.probe(bloom, k, add = true)
+      count += 1
+      offset += lineBytes
+    }
+    def run(file: Path): Run =
+      new Run(file, count, keys.result().toArray, offsets.result().toArray, bloom)
+  }
+
+  private def entry(line: String): (String, String) = {
+    val tab = line.indexOf('\t')
+    (line.substring(0, tab), line.substring(tab + 1))
+  }
+
+  private def lines(in: BufferedReader): Iterator[String] =
+    Iterator.continually(in.readLine()).takeWhile(_ != null)
+
+  /** A file's `key\tvalue` entries in order; lines without a key skip. */
+  private def entries(in: BufferedReader): Iterator[(String, String)] =
+    lines(in).filter(_.indexOf('\t') > 0).map(entry)
+
+  private def withReader[A](file: Path)(f: BufferedReader => A): A = {
+    val in = Files.newBufferedReader(file, UTF_8)
+    try f(in) finally in.close()
+  }
+
+  private def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
+    val s = Files.list(dir)
+    try f(s.iterator().asScala) finally s.close()
+  }
+
+  private def isRun(n: String) = n.startsWith("run-") && n.endsWith(".tsv")
+  private def runNumber(n: String) = n.stripPrefix("run-").stripSuffix(".tsv").toLong
+  private def isSegment(n: String) = n.startsWith("seg-") && n.endsWith(".jsonl")
+  private def segmentSeq(p: Path) =
+    p.getFileName.toString.stripPrefix("seg-").takeWhile(_.isDigit).toLong
+
+  /** The MANIFEST: the highest WAL sequence folded into runs, and the live
+    * runs (name, key count), newest first. */
+  private final case class Manifest(folded: Long, runs: Vector[(String, Long)])
+
+  private def readManifest(dir: Path): Manifest = {
+    val f = dir.resolve("MANIFEST")
+    if (!Files.exists(f)) Manifest(-1L, Vector.empty)
+    else {
+      val ls = Files.readAllLines(f, UTF_8).asScala.filter(_.nonEmpty).toVector
+      Manifest(ls.head.toLong, ls.tail.map(entry).map { case (n, c) => (n, c.toLong) })
+    }
+  }
+
+  /** WAL segments in write order, split at the folded sequence: (folded
+    * into runs, live). */
+  private def segments(dir: Path, folded: Long): (Vector[Path], Vector[Path]) =
+    listDir(dir)(_.filter(p => isSegment(p.getFileName.toString)).toVector)
+      .sortBy(segmentSeq).partition(segmentSeq(_) <= folded)
+
+  private[state] final class Engine(dir: Path, codec: Codec,
+      flushAfterKeys: Int, compactAfter: Int) {
     def encode(v: Any): String = codec.encode(v)
     def decode(s: String): Any = codec.decode(s)
 
+    // every field below is guarded by this engine's lock
     // memtable: unflushed writes (value == Tombstone marks a delete)
     private val memtable = new java.util.HashMap[String, String]()
     // runs NEWEST FIRST (index 0 shadows index 1, ...)
     private var runs: Vector[Run] = Vector.empty
+    private var folded = -1L // highest WAL sequence the runs hold
+    private var segSeq = -1L // highest WAL sequence written
+    private var runSeq = -1L
+    private var segCount = 0 // live segments
     private val blockCache =
       new java.util.LinkedHashMap[(Path, Int), Array[(String, String)]](
         16, 0.75f, true) {
         override def removeEldestEntry(
             e: java.util.Map.Entry[(Path, Int), Array[(String, String)]]): Boolean =
-          size() > cacheBlocks
+          size() > CacheBlocks
       }
 
-    private def listDir[A](f: Iterator[Path] => A): A = {
-      val s = Files.list(dir)
-      try f(s.iterator().asScala) finally s.close()
-    }
-    private def segments(): Seq[Path] = listDir(_
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("seg-") && n.endsWith(".jsonl")
-      }.toSeq.sortBy(_.getFileName.toString))
-
-    private val segSeq = new java.util.concurrent.atomic.AtomicLong(
-      segments().lastOption.map(p =>
-        p.getFileName.toString.stripPrefix("seg-").takeWhile(_.isDigit).toLong)
-        .getOrElse(-1L))
-    private val runSeq = new java.util.concurrent.atomic.AtomicLong(-1L)
-    private var segCount = 0
-
-    private def manifestPath = dir.resolve("MANIFEST")
-
-    /** Build a run's in-heap probes by streaming its file once. */
-    private def loadRun(file: Path): Run = {
-      val keys = Vector.newBuilder[String]
-      val offs = Vector.newBuilder[Long]
-      var count = 0L
-      var offset = 0L
-      // counting pass for bloom sizing is avoided by sizing from the line
-      // count recorded in the manifest-adjacent .meta file; when absent
-      // (legacy), a first pass counts lines
-      val metaFile = dir.resolve(file.getFileName.toString + ".meta")
-      val expected =
-        if (Files.exists(metaFile))
-          new String(Files.readAllBytes(metaFile), StandardCharsets.UTF_8).trim.toLong
-        else {
-          val in = Files.newBufferedReader(file, StandardCharsets.UTF_8)
-          try { var n = 0L; while (in.readLine() != null) n += 1; n }
-          finally in.close()
-        }
-      val bloom = Bloom.alloc(expected, bloomBitsPerKey)
-      val in = Files.newBufferedReader(file, StandardCharsets.UTF_8)
-      try {
-        var line = in.readLine()
-        while (line != null) {
-          val tab = line.indexOf('\t')
-          if (tab > 0) {
-            val k = line.substring(0, tab)
-            if (count % indexEvery == 0) { keys += k; offs += offset }
-            Bloom.add(bloom, k)
-            count += 1
-          }
-          offset += line.getBytes(StandardCharsets.UTF_8).length + 1L
-          line = in.readLine()
-        }
-      } finally in.close()
-      new Run(file, count, keys.result().toArray, offs.result().toArray, bloom)
+    /** Temp write, fsync, then [[publish]] as `name`. */
+    private def writeSynced(name: String, body: String): Unit = {
+      val tmp = dir.resolve(s".$name.tmp")
+      Files.write(tmp, body.getBytes(UTF_8), StandardOpenOption.CREATE,
+        StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE,
+        StandardOpenOption.SYNC)
+      publish(tmp, dir.resolve(name))
     }
 
-    /** Replay manifest + WAL; sweep orphans; fold an over-grown memtable. */
+    /** Atomically rename a synced temp file into place, then fsync the
+      * directory that holds the rename — without it a power loss can drop
+      * a file whose write already returned. */
+    private def publish(tmp: Path, target: Path): Unit = {
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      graft.util.Fs.syncDir(dir)
+    }
+
+    /** Rebuild a run's in-heap probes by streaming its file once. */
+    private def loadRun(file: Path, count: Long): Run = {
+      val p = new Probes(count)
+      withReader(file)(lines(_).foreach { line =>
+        p.add(line.substring(0, line.indexOf('\t')), line.getBytes(UTF_8).length + 1L)
+      })
+      p.run(file)
+    }
+
+    /** Load the MANIFEST's runs, drop unreachable files, replay the live
+      * WAL; fold an over-grown memtable. */
     def load(): Unit = synchronized {
       memtable.clear(); blockCache.clear()
-      val live: Vector[String] =
-        if (Files.exists(manifestPath))
-          Files.readAllLines(manifestPath, StandardCharsets.UTF_8)
-            .asScala.map(_.trim).filter(_.nonEmpty).toVector
-        else Vector.empty
-      runs = live.map(n => loadRun(dir.resolve(n)))
-      runSeq.set((live.map(_.stripPrefix("run-").stripSuffix(".tsv").toLong)
-        ++ listDir(_.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("run-") && n.endsWith(".tsv")
-        }.map(_.getFileName.toString.stripPrefix("run-")
-          .stripSuffix(".tsv").toLong).toSeq)).foldLeft(-1L)(math.max))
-      // orphan runs (crash between rename and manifest) are unreachable,
-      // as are half-written .tmp files
-      listDir(_.filter { p =>
-        val n = p.getFileName.toString
-        (n.startsWith("run-") && n.endsWith(".tsv") && !live.contains(n)) ||
-          (n.endsWith(".meta") && !live.contains(n.stripSuffix(".meta"))) ||
-          (n.startsWith(".") && n.endsWith(".tmp"))
-      }.toSeq).foreach(Files.deleteIfExists(_))
-      segments().foreach { seg =>
-        Files.readAllLines(seg, StandardCharsets.UTF_8).asScala.foreach { line =>
-          val tab = line.indexOf('\t')
-          if (tab > 0) memtable.put(line.substring(0, tab), line.substring(tab + 1))
-        }
-      }
-      segCount = segments().size
+      val m = readManifest(dir)
+      folded = m.folded
+      runs = m.runs.map { case (n, c) => loadRun(dir.resolve(n), c) }
+      val live = m.runs.map(_._1).toSet
+      val names = listDir(dir)(_.map(_.getFileName.toString).toVector)
+      runSeq = names.filter(isRun).map(runNumber).foldLeft(-1L)(math.max)
+      // orphan runs (crash between a run's rename and the MANIFEST naming
+      // it) are unreachable, as are half-written temps
+      names.filter(n => (isRun(n) && !live(n)) || (n.startsWith(".") && n.endsWith(".tmp")))
+        .foreach(n => Files.deleteIfExists(dir.resolve(n)))
+      // a segment at or below the folded sequence is already in the runs:
+      // replaying it would shadow every newer value flushed since
+      val (stale, wal) = segments(dir, folded)
+      stale.foreach(Files.deleteIfExists(_))
+      wal.foreach(withReader(_)(entries(_).foreach { case (k, v) => memtable.put(k, v) }))
+      segSeq = wal.lastOption.map(segmentSeq).getOrElse(folded)
+      segCount = wal.size
       if (memtable.size >= flushAfterKeys || segCount > compactAfter) flush()
     }
 
     /** One atomic WAL segment, then the memtable; flush inline past the
       * cap (pure file I/O — safe from executor tasks). */
     def append(kvs: Seq[(String, String)]): Unit = synchronized {
-      val name = f"seg-${segSeq.incrementAndGet()}%020d-${java.util.UUID.randomUUID().toString.take(8)}.jsonl"
-      val tmp = dir.resolve(s".$name.tmp")
-      val body = kvs.map { case (k, v) => s"$k\t$v" }.mkString("", "\n", "\n")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.SYNC)
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      segSeq += 1
+      writeSynced(
+        f"seg-$segSeq%020d-${java.util.UUID.randomUUID().toString.take(8)}.jsonl",
+        kvs.map { case (k, v) => s"$k\t$v" }.mkString("", "\n", "\n"))
       kvs.foreach { case (k, v) => memtable.put(k, v) }
       segCount += 1
       if (memtable.size >= flushAfterKeys) flush()
     }
 
     def onCommit(): Unit = synchronized {
-      if (!memtable.isEmpty && segCount > compactAfter) flush()
+      if (segCount > compactAfter) flush()
     }
 
     def multiGet(keys: Seq[String]): Seq[Option[String]] = synchronized {
@@ -308,17 +356,15 @@ object DiskBackingMap {
           pos += n
         }
       } finally ch.close()
-      val block = new String(bytes, StandardCharsets.UTF_8)
-        .split('\n').iterator.filter(_.nonEmpty).map { line =>
-          val tab = line.indexOf('\t')
-          (line.substring(0, tab), line.substring(tab + 1))
-        }.toArray
+      val block = new String(bytes, UTF_8)
+        .split('\n').iterator.filter(_.nonEmpty).map(entry).toArray
       blockCache.put(key, block)
       block
     }
 
-    /** Fold the memtable into a new head run, drop the WAL, cascade
-      * merges while the head reaches half its older neighbor. */
+    /** Fold the memtable into a new head run, record the folded sequence,
+      * drop the folded WAL, cascade merges while the head reaches half its
+      * older neighbor. */
     def flush(): Unit = synchronized {
       if (!memtable.isEmpty) {
         val sorted = memtable.entrySet().iterator().asScala
@@ -327,39 +373,32 @@ object DiskBackingMap {
         val entries: Iterator[(String, String)] =
           if (runs.isEmpty) sorted.iterator.filter(_._2 != Tombstone)
           else sorted.iterator
-        val run = writeRun(entries, sorted.length.toLong)
-        runs = run +: runs
-        writeManifest(runs) // the run is visible BEFORE its WAL is dropped
-        memtable.clear()
+        runs = writeRun(entries, sorted.length.toLong) +: runs
       }
-      val segs = segments()
-      segs.foreach(Files.deleteIfExists(_))
+      folded = segSeq
+      writeManifest() // the run and its folded sequence land before any delete
+      memtable.clear()
+      segments(dir, folded)._1.foreach(Files.deleteIfExists(_))
       segCount = 0
       while (runs.length >= 2 && runs(0).count * 2 >= runs(1).count)
         mergeHead()
     }
 
-    /** Stream-write a sorted run + meta, fsync, rename, update manifest. */
+    /** Stream-write a sorted run to a temp file, fsync, publish. */
     private def writeRun(entries: Iterator[(String, String)],
         expected: Long): Run = {
-      val name = f"run-${runSeq.incrementAndGet()}%020d.tsv"
+      runSeq += 1
+      val name = f"run-$runSeq%020d.tsv"
       val tmp = dir.resolve(s".$name.tmp")
-      val keys = Vector.newBuilder[String]
-      val offs = Vector.newBuilder[Long]
-      val bloom = Bloom.alloc(expected, bloomBitsPerKey)
-      var count = 0L
-      var offset = 0L
+      val p = new Probes(expected)
       val out = Files.newOutputStream(tmp, StandardOpenOption.CREATE,
         StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
       val w = new java.io.BufferedOutputStream(out, 1 << 16)
       try {
         entries.foreach { case (k, v) =>
-          if (count % indexEvery == 0) { keys += k; offs += offset }
-          Bloom.add(bloom, k)
-          val bytes = s"$k\t$v\n".getBytes(StandardCharsets.UTF_8)
+          val bytes = s"$k\t$v\n".getBytes(UTF_8)
           w.write(bytes)
-          count += 1
-          offset += bytes.length
+          p.add(k, bytes.length)
         }
         w.flush()
       } finally w.close()
@@ -367,23 +406,14 @@ object DiskBackingMap {
       val fc = java.nio.channels.FileChannel.open(tmp, StandardOpenOption.WRITE)
       try fc.force(true) finally fc.close()
       val file = dir.resolve(name)
-      Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE)
-      Files.write(dir.resolve(s"$name.meta"),
-        count.toString.getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
-      new Run(file, count, keys.result().toArray, offs.result().toArray, bloom)
+      publish(tmp, file)
+      p.run(file)
     }
 
-    private def writeManifest(rs: Vector[Run]): Unit = {
-      val tmp = dir.resolve(".MANIFEST.tmp")
-      Files.write(tmp,
-        rs.map(_.file.getFileName.toString).mkString("", "\n", "\n")
-          .getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE, StandardOpenOption.SYNC)
-      Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE)
-    }
+    private def writeManifest(): Unit =
+      writeSynced("MANIFEST",
+        (folded.toString +: runs.map(r => s"${r.file.getFileName}\t${r.count}"))
+          .mkString("", "\n", "\n"))
 
     /** Merge runs(0) (newer, wins ties) into runs(1); tombstones drop only
       * when the oldest run participates. */
@@ -391,70 +421,34 @@ object DiskBackingMap {
       val newer = runs(0)
       val older = runs(1)
       val dropTombstones = runs.length == 2
-      val a = Files.newBufferedReader(newer.file, StandardCharsets.UTF_8)
-      val b = Files.newBufferedReader(older.file, StandardCharsets.UTF_8)
-      try {
-        def parse(line: String): (String, String) = {
-          val tab = line.indexOf('\t')
-          (line.substring(0, tab), line.substring(tab + 1))
-        }
-        def readNext(r: java.io.BufferedReader): (String, String) = {
-          var line = r.readLine()
-          while (line != null && line.indexOf('\t') <= 0) line = r.readLine()
-          if (line == null) null else parse(line)
-        }
-        val merged = new Iterator[(String, String)] {
-          private var ea = readNext(a)
-          private var eb = readNext(b)
-          private var pending: (String, String) = advance()
-          private def advance(): (String, String) = {
-            while (true) {
-              val out =
-                if (ea == null && eb == null) return null
-                else if (eb == null || (ea != null && ea._1 < eb._1)) {
-                  val o = ea; ea = readNext(a); o
-                } else if (ea == null || eb._1 < ea._1) {
-                  val o = eb; eb = readNext(b); o
-                } else { // equal keys: newer wins
-                  val o = ea; ea = readNext(a); eb = readNext(b); o
-                }
-              if (!(dropTombstones && out._2 == Tombstone)) return out
-            }
-            null
+      val run = withReader(newer.file) { a =>
+        withReader(older.file) { b =>
+          val na = entries(a).buffered
+          val nb = entries(b).buffered
+          val merged = new Iterator[(String, String)] {
+            def hasNext: Boolean = na.hasNext || nb.hasNext
+            def next(): (String, String) =
+              if (!nb.hasNext || (na.hasNext && na.head._1 < nb.head._1)) na.next()
+              else if (!na.hasNext || nb.head._1 < na.head._1) nb.next()
+              else { nb.next(); na.next() } // equal keys: newer wins
           }
-          def hasNext: Boolean = pending != null
-          def next(): (String, String) = {
-            val o = pending; pending = advance(); o
-          }
+          writeRun(merged.filterNot(e => dropTombstones && e._2 == Tombstone),
+            newer.count + older.count)
         }
-        val run = writeRun(merged, newer.count + older.count)
-        val rest = runs.drop(2)
-        runs = run +: rest
-        writeManifest(runs)
-        Seq(newer, older).foreach { r =>
-          Files.deleteIfExists(r.file)
-          Files.deleteIfExists(
-            dir.resolve(r.file.getFileName.toString + ".meta"))
-          val it = blockCache.keySet().iterator()
-          while (it.hasNext) if (it.next()._1 == r.file) it.remove()
-        }
-      } finally { a.close(); b.close() }
+      }
+      runs = run +: runs.drop(2)
+      writeManifest()
+      Seq(newer, older).foreach { r =>
+        Files.deleteIfExists(r.file)
+        blockCache.keySet().removeIf(_._1 == r.file)
+      }
     }
 
     /** Merged full scan: runs oldest→newest overlaid, then the memtable. */
     def scanAll(): Seq[(String, String)] = synchronized {
       val acc = new java.util.HashMap[String, String]()
-      runs.reverseIterator.foreach { r =>
-        val in = Files.newBufferedReader(r.file, StandardCharsets.UTF_8)
-        try {
-          var line = in.readLine()
-          while (line != null) {
-            val tab = line.indexOf('\t')
-            if (tab > 0) acc.put(line.substring(0, tab), line.substring(tab + 1))
-            line = in.readLine()
-          }
-        } finally in.close()
-      }
+      runs.reverseIterator.foreach(r => withReader(r.file)(
+        entries(_).foreach { case (k, v) => acc.put(k, v) }))
       memtable.forEach((k, v) => acc.put(k, v))
       acc.entrySet().iterator().asScala
         .filter(_.getValue != Tombstone)
@@ -471,20 +465,17 @@ object DiskBackingMap {
         r.indexKeys.foreach(k => b += 40L + k.length.toLong * 2)
       }
       b += memtable.size.toLong * 120
-      b += blockCache.size.toLong * indexEvery.toLong * 80
+      b += blockCache.size.toLong * IndexEvery.toLong * 80
       b
     }
 
     def runCount: Int = synchronized(runs.length)
     def runSizes: Seq[Long] = synchronized(runs.map(_.count))
 
-    /** Flush everything so the on-disk run set alone is the full state
-      * (clean shutdown / pre-readAsDF fence). */
-    def checkpointNow(): Unit = synchronized {
-      if (!memtable.isEmpty || segments().nonEmpty) flush()
-      if (runs.length > 1) {
-        while (runs.length >= 2) mergeHead()
-      } else writeManifest(runs)
+    /** Flush and merge everything, so one run alone is the full state. */
+    def compact(): Unit = synchronized {
+      flush()
+      while (runs.length >= 2) mergeHead()
     }
   }
 
@@ -493,24 +484,22 @@ object DiskBackingMap {
     engines.getOrElse(path, throw new IllegalStateException(
       s"DiskBackingMap at $path not open in this process — call open() first"))
 
-  /** Open (or re-open) the store at `path`. Heap bound ≈
-    * flushAfterKeys·entrySize + keys/indexEvery·keySize +
-    * keys·bloomBitsPerKey/8 + cacheBlocks·indexEvery·entrySize. */
-  def open[T](path: String, codec: ParquetBackingMap.Codec,
-      flushAfterKeys: Int = 262144, indexEvery: Int = 64,
-      cacheBlocks: Int = 2048, bloomBitsPerKey: Int = 8,
+  /** Open (or re-open) the store at `path`: load the runs, replay the WAL,
+    * and flush once the WAL has passed `compactAfter` segments. Heap bound ≈
+    * flushAfterKeys·entrySize + keys/IndexEvery·keySize + keys +
+    * CacheBlocks·IndexEvery·entrySize. Returns a serializable handle. */
+  def open[T](path: String, codec: Codec, flushAfterKeys: Int = 262144,
       compactAfter: Int = 64): DiskBackingMap[T] = {
     val dir = Paths.get(path)
     Files.createDirectories(dir)
-    val e = new Engine(dir, codec, flushAfterKeys, indexEvery, cacheBlocks,
-      bloomBitsPerKey, compactAfter)
+    val e = new Engine(dir, codec, flushAfterKeys, compactAfter)
     e.load()
     engines.put(path, e)
     new DiskBackingMap[T](path)
   }
 
-  /** Fold memtable + WAL + all runs into ONE run (clean shutdown fence). */
-  def checkpoint(path: String): Unit = engine(path).checkpointNow()
+  /** Fold memtable + WAL + all runs into ONE run (e.g. at clean shutdown). */
+  def compact(path: String): Unit = engine(path).compact()
 
   /** Drill introspection: (run count, run sizes newest-first, resident
     * probe-bytes estimate). */
@@ -523,29 +512,20 @@ object DiskBackingMap {
     * remain — the next `open()` replays them). */
   def close(path: String): Unit = engines.remove(path)
 
-  /** The store's live contents as a DataFrame of (k, v) JSON strings —
-    * the distributed read face (same contract as
-    * [[ParquetBackingMap.readAsDF]]): runs at manifest precedence
-    * (newest wins) unioned with the WAL segments (newer still), resolved
-    * with one max_by per key; tombstones drop. Read between commits. */
+  /** The store's live contents as a DataFrame of (k, v) JSON strings — the
+    * DISTRIBUTED read face: runs at MANIFEST precedence (newest wins)
+    * unioned with the live WAL segments (newer still, later segments win),
+    * resolved with one max_by per key; tombstoned keys drop. Nothing
+    * driver-sized: a 10⁹-key store reads as a normal Spark job over its
+    * files, and no in-process engine is needed. Read between commits (the
+    * LSM reader discipline: renames are atomic, so a racing read sees or
+    * misses whole files). Keys written more than once within ONE multiPut
+    * call resolve arbitrarily among that call's values. */
   def readAsDF(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val dir = Paths.get(path)
-    require(Files.isDirectory(dir), s"no disk store at $path")
-    val manifest = dir.resolve("MANIFEST")
-    val live: Vector[String] =
-      if (Files.exists(manifest))
-        Files.readAllLines(manifest, StandardCharsets.UTF_8)
-          .asScala.map(_.trim).filter(_.nonEmpty).toVector
-      else Vector.empty
-    def listSegs(): Seq[String] = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("seg-") && n.endsWith(".jsonl")
-      }.map(_.toString).toSeq.sorted
-      finally s.close()
-    }
+    require(Files.isDirectory(dir), s"no durable state store at $path")
+    val m = readManifest(dir)
     def kvOf(df: org.apache.spark.sql.Dataset[String],
              prec: org.apache.spark.sql.Column): DataFrame =
       df.select(F.col("value"), prec.as("__seq"))
@@ -555,12 +535,12 @@ object DiskBackingMap {
           F.expr("substring(value, instr(value, '\t') + 1)").as("v"),
           F.col("__seq"))
     // run precedence: position from the END of the manifest (newest =
-    // largest); segments sit above every run
-    val runDFs = live.zipWithIndex.map { case (n, i) =>
+    // largest); live segments sit above every run
+    val runDFs = m.runs.zipWithIndex.map { case ((n, _), i) =>
       kvOf(spark.read.textFile(dir.resolve(n).toString),
-        F.lit((live.length - i).toLong))
+        F.lit((m.runs.length - i).toLong))
     }
-    val segs = listSegs()
+    val segs = segments(dir, m.folded)._2.map(_.toString)
     val segDF =
       if (segs.isEmpty) None
       else Some(kvOf(spark.read.textFile(segs: _*),

@@ -29,8 +29,8 @@ trait ScannableBacking {
 
 /** Optional commit hook: the exactly-once wrappers call this from the
   * DRIVER-side `commit(txid)` bracket after each batch — where a store can
-  * run maintenance it must not do inside executor tasks (e.g.
-  * [[ParquetBackingMap]] folds its WAL into a parquet snapshot here). */
+  * run maintenance once per batch (e.g. [[DiskBackingMap]] folds a grown
+  * WAL into a sorted run here). */
 trait CommitAwareBacking {
   def onCommit(): Unit
 }

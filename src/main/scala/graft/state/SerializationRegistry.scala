@@ -4,9 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, 
 import java.util.Base64
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 
-import graft.state.ParquetBackingMap.Codec
+import graft.state.DiskBackingMap.Codec
 
 /** Custom value-serializer registration — the analog of the reference's
   * `Config.registerSerialization`
@@ -22,7 +22,7 @@ import graft.state.ParquetBackingMap.Codec
   * wire formats is STATE values crossing into external key-value stores
   * through [[IBackingMap]] (the reference hits the same boundary when
   * MapState values leave the JVM for Cassandra/Memcached). A [[Codec]]
-  * maps a value class to a string wire form; [[ParquetBackingMap]] — and
+  * maps a value class to a string wire form; [[DiskBackingMap]] — and
   * any user store — resolves unknown value classes here before giving up.
   *
   * For typed `Dataset[T]` work on classes without product encoders,
@@ -105,12 +105,12 @@ object SerializationRegistry {
       TransactionalValue(txid.asInstanceOf[Long], inner.decode(value.asInstanceOf[String]))
     })
 
-  /** Open a durable [[ParquetBackingMap]] whose value codec comes from
+  /** Open a durable [[DiskBackingMap]] whose value codec comes from
     * this registry — `open(classOf[MyValue], ...)` is the store-side
     * mirror of `Config.registerSerialization(MyValue.class, ...)`. */
-  def openRegistered[T](spark: SparkSession, path: String, valueClass: Class[_],
-      compactAfter: Int = 64): ParquetBackingMap[T] =
-    ParquetBackingMap.open[T](spark, path, resolve(valueClass), compactAfter)
+  def openRegistered[T](path: String, valueClass: Class[_],
+      compactAfter: Int = 64): DiskBackingMap[T] =
+    DiskBackingMap.open[T](path, resolve(valueClass), compactAfter = compactAfter)
 
   /** Spark's generic binary encoder for a class with no product encoder —
     * the typed-Dataset escape hatch analogous to the reference carrying

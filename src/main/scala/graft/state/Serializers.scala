@@ -78,7 +78,7 @@ object StateSerializers {
   }
 
   /** Group-by key tuple (scalars) as a JSON array — the key encoding for
-    * external stores ([[ParquetBackingMap]] and any real KV behind
+    * external stores ([[DiskBackingMap]] and any real KV behind
     * `IBackingMap`). */
   def keyToJson(key: Seq[Any]): String = key.map(writeScalar).mkString("[", ",", "]")
   def keyFromJson(s: String): Seq[Any] = readScalars(s)

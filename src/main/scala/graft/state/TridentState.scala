@@ -13,7 +13,7 @@ final class TridentState[T](val mapState: MapState[T], val storeId: String,
                             val keys: Fields, val valueField: String) {
 
   /** Snapshot the keyed store as a DataFrame through the backing's
-    * [[ScannableBacking]] scan face (memory, parquet-durable, or any
+    * [[ScannableBacking]] scan face (memory, disk-durable, or any
     * custom store that exposes one) — a non-scannable backing fails
     * LOUDLY here instead of quietly producing empty state. */
   def toDF(spark: SparkSession, schema: StructType): DataFrame = {

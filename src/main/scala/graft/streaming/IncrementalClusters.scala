@@ -379,8 +379,8 @@ final class IncrementalClusters(
     * forward along resolution paths, so ANY torn prefix of the writes
     * leaves find() correct. Driver-sized (a full scan, like [[snapshot]])
     * — a maintenance-window operation, not a per-batch one; the commit
-    * bracket triggers commit-aware backings' WAL compaction so the folded
-    * links land in the next durable snapshot. Use a txid outside the
+    * bracket triggers commit-aware backings' WAL flush so the folded
+    * links land in the next sorted run. Use a txid outside the
     * batch id sequence (e.g. the next batch id — the fold never touches
     * the journal, so replay detection is unaffected). */
   def compactState(txid: Long): Unit = {
@@ -452,7 +452,7 @@ object IncrementalClusters {
 
   /** Long-vector entries (the replay journal) on the scalar JSON state
     * wire: comma-joined string; empty vector ⇄ empty string. */
-  private[streaming] val vectorCodec = graft.state.ParquetBackingMap.Codec(
+  private[streaming] val vectorCodec = graft.state.DiskBackingMap.Codec(
     v => graft.state.StateSerializers.nonTransactionalToJson(
       v.asInstanceOf[Vector[Long]].mkString(",")),
     s => {
@@ -465,7 +465,7 @@ object IncrementalClusters {
   /** Best-representative entries on the scalar JSON state wire:
     * "quality|id" (the wire handles scalars only — the reference's JSON
     * serializers have the same shape). */
-  private[streaming] val bestCodec = graft.state.ParquetBackingMap.Codec(
+  private[streaming] val bestCodec = graft.state.DiskBackingMap.Codec(
     v => {
       val (q, id) = v.asInstanceOf[(Double, Long)]
       graft.state.StateSerializers.nonTransactionalToJson(s"$q|$id")
@@ -477,26 +477,32 @@ object IncrementalClusters {
       (joined.substring(0, i).toDouble, joined.substring(i + 1).toLong)
     })
 
-  /** DURABLE pair over [[graft.state.ParquetBackingMap]] (WAL segments +
-    * parquet snapshots): the clustering survives process restart — close
+  /** DURABLE triple over [[graft.state.DiskBackingMap]] (size-tiered
+    * sorted runs + WAL): the clustering survives process restart — close
     * with [[closeDurable]], re-open with another `durable(...)` and the
-    * labels replay from disk (spec-pinned incl. a cross-restart merge). */
-  def durable(spark: org.apache.spark.sql.SparkSession,
-              dir: String): IncrementalClusters = new IncrementalClusters(
-    new graft.state.NonTransactionalMap(
-      graft.state.ParquetBackingMap.open[Long](spark, s"$dir/parents",
-        graft.state.ParquetBackingMap.nonTransactionalCodec)),
-    Some(new graft.state.NonTransactionalMap(
-      graft.state.ParquetBackingMap.open[(Double, Long)](spark, s"$dir/best",
-        bestCodec))),
-    Some(new graft.state.NonTransactionalMap(
-      graft.state.ParquetBackingMap.open[Vector[Long]](spark, s"$dir/journal",
-        vectorCodec))))
+    * labels replay from disk (spec-pinned incl. a cross-restart merge).
+    * The heap holds only the memtable and per-run probes (~2 B/key), so a
+    * CORPUS-SIZED key universe fits — `parents` keys every id ever seen;
+    * per-batch latency and resident memory drilled flat at 10⁷–10⁸ keys
+    * under a pinned -Xmx (`graft.tools.DiskMapDrill`, SCALE.md). Needs no
+    * SparkSession — the store is pure JVM. */
+  def durable(dir: String,
+              flushAfterKeys: Int = 262144): IncrementalClusters =
+    new IncrementalClusters(
+      new graft.state.NonTransactionalMap(
+        graft.state.DiskBackingMap.open[Long](s"$dir/parents",
+          graft.state.DiskBackingMap.nonTransactionalCodec, flushAfterKeys)),
+      Some(new graft.state.NonTransactionalMap(
+        graft.state.DiskBackingMap.open[(Double, Long)](s"$dir/best",
+          bestCodec, flushAfterKeys))),
+      Some(new graft.state.NonTransactionalMap(
+        graft.state.DiskBackingMap.open[Vector[Long]](s"$dir/journal",
+          vectorCodec, flushAfterKeys))))
 
   /** DISTRIBUTED snapshot face (VERDICT r15 #2): the full current labeling
-    * of a DURABLE clustering read straight from its files — the parquet
-    * snapshot + WAL segments of the `parents` store become a DataFrame of
-    * (id, parent) links ([[graft.state.ParquetBackingMap.readAsDF]]), and
+    * of a DURABLE clustering read straight from its files — the sorted
+    * runs + WAL segments of the `parents` store become a DataFrame of
+    * (id, parent) links ([[graft.state.DiskBackingMap.readAsDF]]), and
     * chains resolve by POINTER DOUBLING: each round joins the link table
     * to itself (parent := parent's parent), so a chain of length L folds
     * in ceil(log2 L) shuffle rounds — the classic distributed find. The
@@ -510,19 +516,8 @@ object IncrementalClusters {
     * ContextCleaner drops a local cut's blocks once the frame is garbage
     * (`unpersist` frees neither). */
   def snapshotDistributed(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, maxRounds: Int = 24): DataFrame =
-    resolveLinkFrame(
-      graft.state.ParquetBackingMap.readAsDF(spark, s"$dir/parents"), maxRounds)
-
-  /** Pointer-doubling resolution over a (k, v) JSON link frame — shared
-    * by the parquet and disk distributed faces. */
-  private def resolveLinkFrame(kv: DataFrame, maxRounds: Int): DataFrame = {
-    val links = kv.select(
-      F.regexp_extract(F.col("k"), "^\\[(-?\\d+)\\]$", 1)
-        .cast("long").as("id"),
-      F.regexp_extract(F.col("v"), "^\\[(-?\\d+)\\]$", 1)
-        .cast("long").as("parent"))
-    var cur = Lineage.cut(links)
+                          dir: String, maxRounds: Int = 24): DataFrame = {
+    var cur = Lineage.cut(parentLinks(spark, dir))
     var round = 0
     var anyChanged = true
     var liveCut = cur
@@ -546,6 +541,15 @@ object IncrementalClusters {
     cur.select(F.col("id"), F.col("parent").as("cluster_id"))
   }
 
+  /** The durable `parents` store's (id, parent) links, read from its files. */
+  private def parentLinks(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): DataFrame =
+    graft.state.DiskBackingMap.readAsDF(spark, s"$dir/parents").select(
+      F.regexp_extract(F.col("k"), "^\\[(-?\\d+)\\]$", 1)
+        .cast("long").as("id"),
+      F.regexp_extract(F.col("v"), "^\\[(-?\\d+)\\]$", 1)
+        .cast("long").as("parent"))
+
   /** Distributed quality-tier readout: (cluster_id, best_id, best_quality)
     * per LIVE root, read from the durable `best` + `parents` files — the
     * scan-free face of [[IncrementalClusters.bestSnapshot]]. Liveness is a
@@ -553,16 +557,10 @@ object IncrementalClusters {
     * needed: an entry is live iff its key is still a root). */
   def bestSnapshotDistributed(spark: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame = {
-    val roots = graft.state.ParquetBackingMap
-      .readAsDF(spark, s"$dir/parents")
-      .select(
-        F.regexp_extract(F.col("k"), "^\\[(-?\\d+)\\]$", 1)
-          .cast("long").as("id"),
-        F.regexp_extract(F.col("v"), "^\\[(-?\\d+)\\]$", 1)
-          .cast("long").as("parent"))
+    val roots = parentLinks(spark, dir)
       .where(F.col("id") === F.col("parent"))
       .select(F.col("id").as("cluster_id"))
-    graft.state.ParquetBackingMap.readAsDF(spark, s"$dir/best")
+    graft.state.DiskBackingMap.readAsDF(spark, s"$dir/best")
       .select(
         F.regexp_extract(F.col("k"), "^\\[(-?\\d+)\\]$", 1)
           .cast("long").as("cluster_id"),
@@ -577,45 +575,8 @@ object IncrementalClusters {
   /** Drop the in-process engines (simulates process exit; durable files
     * remain for the next [[durable]] open). */
   def closeDurable(dir: String): Unit = {
-    graft.state.ParquetBackingMap.close(s"$dir/parents")
-    graft.state.ParquetBackingMap.close(s"$dir/best")
-    graft.state.ParquetBackingMap.close(s"$dir/journal")
-  }
-
-  /** DURABLE triple over the BOUNDED-HEAP [[graft.state.DiskBackingMap]]
-    * (size-tiered sorted runs + WAL; VERDICT r15 #1): the deployment
-    * shape for a CORPUS-SIZED key universe — `parents` keys every id
-    * ever seen, and here those keys live on disk while the heap holds
-    * only the memtable and per-run probes (~2 B/key). Same fold laws,
-    * same restart semantics as [[durable]] (spec-pinned over this
-    * backing too); per-batch latency and resident memory drilled flat at
-    * 10⁷–10⁸ keys under a pinned -Xmx (`graft.tools.DiskMapDrill`,
-    * SCALE.md). Needs no SparkSession — the store is pure JVM. */
-  def durableDisk(dir: String,
-                  flushAfterKeys: Int = 262144): IncrementalClusters =
-    new IncrementalClusters(
-      new graft.state.NonTransactionalMap(
-        graft.state.DiskBackingMap.open[Long](s"$dir/parents",
-          graft.state.ParquetBackingMap.nonTransactionalCodec, flushAfterKeys)),
-      Some(new graft.state.NonTransactionalMap(
-        graft.state.DiskBackingMap.open[(Double, Long)](s"$dir/best",
-          bestCodec, flushAfterKeys))),
-      Some(new graft.state.NonTransactionalMap(
-        graft.state.DiskBackingMap.open[Vector[Long]](s"$dir/journal",
-          vectorCodec, flushAfterKeys))))
-
-  /** Drop the in-process disk engines (process-exit simulation). */
-  def closeDurableDisk(dir: String): Unit = {
     graft.state.DiskBackingMap.close(s"$dir/parents")
     graft.state.DiskBackingMap.close(s"$dir/best")
     graft.state.DiskBackingMap.close(s"$dir/journal")
   }
-
-  /** [[snapshotDistributed]] over a [[durableDisk]] directory (the
-    * bounded-heap tier's files: sorted runs + WAL via
-    * [[graft.state.DiskBackingMap.readAsDF]]). */
-  def snapshotDistributedDisk(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, maxRounds: Int = 24): DataFrame =
-    resolveLinkFrame(
-      graft.state.DiskBackingMap.readAsDF(spark, s"$dir/parents"), maxRounds)
 }

@@ -36,7 +36,7 @@ object DiskMapDrill {
     val dir = java.nio.file.Files.createTempDirectory("diskmap-drill").toString
     println(s"[diskmap] dir=$dir totalKeys=$totalKeys batchSize=$batchSize " +
       s"flushAfterKeys=$flushAfterKeys maxHeap=${Runtime.getRuntime.maxMemory() >> 20}MiB")
-    val ic = graft.streaming.IncrementalClusters.durableDisk(dir, flushAfterKeys)
+    val ic = graft.streaming.IncrementalClusters.durable(dir, flushAfterKeys)
     val parents = icParents(ic)
     val rnd = new java.util.Random(42)
     val lat = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -110,13 +110,13 @@ object DiskMapDrill {
       }.toMap
     }
     val before = labels(parents)
-    graft.streaming.IncrementalClusters.closeDurableDisk(dir)
-    val ic2 = graft.streaming.IncrementalClusters.durableDisk(dir, flushAfterKeys)
+    graft.streaming.IncrementalClusters.closeDurable(dir)
+    val ic2 = graft.streaming.IncrementalClusters.durable(dir, flushAfterKeys)
     val after = labels(icParents(ic2))
     require(before == after,
       s"restart parity FAILED: ${before.toSet.diff(after.toSet).take(5)}")
     println(s"[diskmap] restart parity OK over ${sampleIds.size} sampled ids")
-    graft.streaming.IncrementalClusters.closeDurableDisk(dir)
+    graft.streaming.IncrementalClusters.closeDurable(dir)
     graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
   }
 

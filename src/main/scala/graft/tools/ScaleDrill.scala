@@ -1478,7 +1478,7 @@ object ScaleDrill {
     * disk-tier parents store directly (clusters of 10 with 5-hop chains
     * mixed in — pointer doubling has real work), then requires the
     * distributed face ([[graft.streaming.IncrementalClusters
-    * .snapshotDistributedDisk]]) to equal the driver scanAll face
+    * .snapshotDistributed]]) to equal the driver scanAll face
     * EXACTLY (both `except` directions empty), reporting both wall times
     * and the driver-heap delta of the distributed read (flat — the
     * labels never collect). */
@@ -1486,7 +1486,7 @@ object ScaleDrill {
     val dir = java.nio.file.Files.createTempDirectory("distsnap").toString
     try {
       val store = graft.state.DiskBackingMap.open[Long](s"$dir/parents",
-        graft.state.ParquetBackingMap.nonTransactionalCodec,
+        graft.state.DiskBackingMap.nonTransactionalCodec,
         flushAfterKeys = 1 << 20)
       val t0 = System.nanoTime()
       // clusters of 10 (parent = group base); within the first 5 members
@@ -1499,7 +1499,7 @@ object ScaleDrill {
         }
         store.multiPut(ks, vs)
       }
-      graft.state.DiskBackingMap.checkpoint(s"$dir/parents")
+      graft.state.DiskBackingMap.compact(s"$dir/parents")
       val buildSec = (System.nanoTime() - t0) / 1e9
       val rt = Runtime.getRuntime
       // heap delta measured around a PURE distributed readout (count only,
@@ -1509,13 +1509,13 @@ object ScaleDrill {
       val heapBefore = rt.totalMemory() - rt.freeMemory()
       val t1 = System.nanoTime()
       val nDist = graft.streaming.IncrementalClusters
-        .snapshotDistributedDisk(spark, dir).count()
+        .snapshotDistributed(spark, dir).count()
       val distSec = (System.nanoTime() - t1) / 1e9
       System.gc()
       val heapAfter = rt.totalMemory() - rt.freeMemory()
       // parity pass reuses one materialization across both excepts
       val dist = Lineage.cut(graft.streaming.IncrementalClusters
-        .snapshotDistributedDisk(spark, dir))
+        .snapshotDistributed(spark, dir))
       // expected labels: every id labels to its group base
       import org.apache.spark.sql.{functions => FF}
       val expect = spark.range(keys.toLong)
@@ -1560,7 +1560,7 @@ object ScaleDrill {
     try {
       // phase 1 runs with best-GC DISABLED (a legacy/non-removable
       // backing) so the sweep has real work to do
-      val raw = graft.streaming.IncrementalClusters.durable(spark, dir)
+      val raw = graft.streaming.IncrementalClusters.durable(dir)
       class NoRemove[T](inner: graft.state.MapState[T])
           extends graft.state.MapState[T] {
         def multiGet(ks: Seq[Seq[Any]]) = inner.multiGet(ks)
@@ -1602,7 +1602,7 @@ object ScaleDrill {
       val labelsPost = raw.snapshot(spark).as[(Long, Long)].collect().toMap
       // restart: the folded state replays identically
       graft.streaming.IncrementalClusters.closeDurable(dir)
-      val re = graft.streaming.IncrementalClusters.durable(spark, dir)
+      val re = graft.streaming.IncrementalClusters.durable(dir)
       val labelsReplay = re.snapshot(spark).as[(Long, Long)].collect().toMap
       println(f"[scale] chainfold dethr=$dethronements ids=$ids " +
         f"chains pre(max=$maxPre mean=$meanPre%.1f) post(max=$maxPost mean=$meanPost%.2f) " +
@@ -1622,9 +1622,9 @@ object ScaleDrill {
 
   /** WAL-growth drill for the durable state tier (VERDICT r14 #7): a
     * long-running incremental-clusters stream (default 200 batches) over
-    * [[graft.state.ParquetBackingMap]], recording the segment-count curve
+    * [[graft.state.DiskBackingMap]], recording the segment-count curve
     * and the open()-replay time at three points: mid-run (WAL at its
-    * natural size under the in-run commit-hook compaction), after a forced
+    * natural size under the in-run commit-hook flush), after a forced
     * compaction, and cold. The commit hook must keep the segment count
     * bounded by compactAfter regardless of run length. */
   def walGrowthDrill(spark: SparkSession, batches: Int): Unit = {
@@ -1642,11 +1642,11 @@ object ScaleDrill {
     def reopenSec(): (Double, graft.streaming.IncrementalClusters) = {
       graft.streaming.IncrementalClusters.closeDurable(dir)
       val t0 = System.nanoTime()
-      val opened = graft.streaming.IncrementalClusters.durable(spark, dir)
+      val opened = graft.streaming.IncrementalClusters.durable(dir)
       ((System.nanoTime() - t0) / 1e9, opened)
     }
     try {
-      var inc = graft.streaming.IncrementalClusters.durable(spark, dir)
+      var inc = graft.streaming.IncrementalClusters.durable(dir)
       var maxSegs = 0
       import spark.implicits._
       (0 until batches).foreach { j =>
@@ -1664,18 +1664,18 @@ object ScaleDrill {
       }
       val segsEnd = segCount("parents")
       val (replayEnd, _) = reopenSec()
-      graft.state.ParquetBackingMap.compact(s"$dir/parents")
-      graft.state.ParquetBackingMap.compact(s"$dir/best")
-      graft.state.ParquetBackingMap.compact(s"$dir/journal")
+      graft.state.DiskBackingMap.compact(s"$dir/parents")
+      graft.state.DiskBackingMap.compact(s"$dir/best")
+      graft.state.DiskBackingMap.compact(s"$dir/journal")
       val segsCompacted = segCount("parents")
       val (replayCompacted, inc3) = reopenSec()
       val keys = inc3.snapshot(spark).count()
       println(f"[scale] walgrowth end: batches=$batches maxsegs=$maxSegs segs=$segsEnd replay=$replayEnd%6.2fs; " +
         f"compacted: segs=$segsCompacted replay=$replayCompacted%6.2fs keys=$keys")
-      // the in-run commit hook must bound the WAL: one compaction cycle's
+      // the in-run commit hook must bound the WAL: one flush cycle's
       // budget (64) plus the puts between commits, never O(batches × puts)
       require(maxSegs <= 80,
-        s"WAL grew unbounded: $maxSegs segments — the commit-hook compaction is not firing")
+        s"WAL grew unbounded: $maxSegs segments — the commit-hook flush is not firing")
       require(segsCompacted == 0, s"forced compaction left $segsCompacted segments")
     } finally {
       graft.streaming.IncrementalClusters.closeDurable(dir)

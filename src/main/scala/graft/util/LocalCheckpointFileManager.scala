@@ -1,8 +1,7 @@
 package graft.util
 
 import java.io.{BufferedOutputStream, FileOutputStream}
-import java.nio.channels.FileChannel
-import java.nio.file.{FileSystemException, Files, StandardCopyOption, StandardOpenOption, Path => JPath}
+import java.nio.file.{FileSystemException, Files, StandardCopyOption, Path => JPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, Path}
 import org.apache.spark.sql.SparkSession
@@ -76,10 +75,7 @@ class LocalCheckpointFileManager(path: Path, conf: Configuration)
       true
     }
 
-  protected def syncDir(dir: JPath): Unit = {
-    val ch = FileChannel.open(dir, StandardOpenOption.READ)
-    try ch.force(true) finally ch.close()
-  }
+  protected def syncDir(dir: JPath): Unit = Fs.syncDir(dir)
 
   override def mkdirs(p: Path): Unit = local(p) match {
     case Some(d) => Files.createDirectories(d)

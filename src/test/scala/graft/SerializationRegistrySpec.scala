@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.state._
-import graft.state.ParquetBackingMap.Codec
+import graft.state.DiskBackingMap.Codec
 
 /** The `Config.registerSerialization` analog (`Config.java:860-875` →
   * `SerializationFactory.java:80-104`): custom value classes get a
@@ -26,18 +26,13 @@ class SerializationRegistrySpec extends AnyFunSuite {
     s => { val i = s.indexOf('|'); WordStats(s.substring(0, i).toLong, s.substring(i + 1)) })
 
   test("registered codec round-trips a custom value class through the durable store") {
-    lazy val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     SerializationRegistry.register(classOf[WordStats],
       SerializationRegistry.opaque(wordStatsCodec))
     val dir = java.nio.file.Files.createTempDirectory("graft-reg").toString
     try {
       val m1 = new OpaqueMap[WordStats](
         SerializationRegistry.openRegistered[OpaqueValue[WordStats]](
-          spark, dir, classOf[WordStats], compactAfter = 1))
+          dir, classOf[WordStats], compactAfter = 1))
       val k = Seq(Seq[Any]("cats"))
       m1.beginCommit(Some(0L))
       m1.multiUpdate(k, Seq(upd(
@@ -45,10 +40,10 @@ class SerializationRegistrySpec extends AnyFunSuite {
       m1.commit(Some(0L))
 
       // process restart: value must decode through the registered codec
-      ParquetBackingMap.close(dir)
+      DiskBackingMap.close(dir)
       val m2 = new OpaqueMap[WordStats](
         SerializationRegistry.openRegistered[OpaqueValue[WordStats]](
-          spark, dir, classOf[WordStats], compactAfter = 64))
+          dir, classOf[WordStats], compactAfter = 64))
       assert(m2.multiGet(Seq(k.head)) == Seq(Some(WordStats(3, "purring"))))
 
       // opaque replay of txid 0 rolls back to prev (none) before re-applying
@@ -59,7 +54,7 @@ class SerializationRegistrySpec extends AnyFunSuite {
       assert(replayed == Seq(WordStats(1, "hiss")))
     } finally {
       SerializationRegistry.unregister(classOf[WordStats])
-      ParquetBackingMap.close(dir)
+      DiskBackingMap.close(dir)
       graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }

@@ -62,14 +62,6 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
       Prop(got == Seq(Some(expected))) :| s"got $got expected $expected"
     }
 
-  // shared tiny session for the durable-map property (no Spark jobs run at
-  // compactAfter = MaxValue — open() only needs the session for snapshots)
-  private lazy val propSpark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   private case class Op(key: String, partial: Long, failedFirst: Boolean,
                         restartBefore: Boolean)
 
@@ -86,12 +78,14 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
       TempDirs.withTempDir("pbmprop") { path =>
         val dir = path.toString
         val mem = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]](memId))
-        def openDurable() = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-          propSpark, dir, ParquetBackingMap.opaqueCodec, compactAfter = Int.MaxValue))
+        // 2 keys per memtable and 2 segments per WAL: inline flushes, run
+        // merges and commit-time flushes all happen inside one sequence
+        def openDurable() = new OpaqueMap[Long](DiskBackingMap.open[OpaqueValue[Long]](
+          dir, DiskBackingMap.opaqueCodec, flushAfterKeys = 2, compactAfter = 2))
         var durable = openDurable()
         ops.zipWithIndex.foreach { case (op, txid) =>
           if (op.restartBefore) { // process dies between batches, WAL replays
-            ParquetBackingMap.close(dir)
+            DiskBackingMap.close(dir)
             durable = openDurable()
           }
           val k = Seq(Seq[Any](op.key))
@@ -109,7 +103,7 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
         val got = durable.multiGet(keys)
         val want = mem.multiGet(keys)
         MemoryBackingMap.clear(memId)
-        ParquetBackingMap.close(dir)
+        DiskBackingMap.close(dir)
         Prop(got == want) :| s"durable $got vs memory $want"
       }
     }
@@ -122,7 +116,7 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
         val dir = path.toString
         val memInc = graft.streaming.IncrementalClusters.inMemory(id)
         // flushAfterKeys=4: every batch crosses flush/merge boundaries
-        var diskInc = graft.streaming.IncrementalClusters.durableDisk(dir,
+        var diskInc = graft.streaming.IncrementalClusters.durable(dir,
           flushAfterKeys = 4)
         var diskParents = new CountingMapState(diskInc.parents)
         def q(n: Long): Double = ((n * 3) % 7).toDouble
@@ -140,8 +134,8 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
           val storedOk = diskInc.parents.scanAll().toMap ==
             memInc.parents.scanAll().toMap
           // process restart between batches: reopen from disk
-          graft.streaming.IncrementalClusters.closeDurableDisk(dir)
-          diskInc = graft.streaming.IncrementalClusters.durableDisk(dir,
+          graft.streaming.IncrementalClusters.closeDurable(dir)
+          diskInc = graft.streaming.IncrementalClusters.durable(dir,
             flushAfterKeys = 4)
           diskParents = new CountingMapState(diskInc.parents)
           val restartOk = diskInc.parents.scanAll().toMap ==
@@ -151,7 +145,7 @@ object StatePropertySpec extends Properties("ExactlyOnceState") {
               s"stored=$storedOk restart=$restartOk")
           emitOk && lawOk && storedOk && restartOk
         }
-        graft.streaming.IncrementalClusters.closeDurableDisk(dir)
+        graft.streaming.IncrementalClusters.closeDurable(dir)
         graft.streaming.IncrementalClusters.clearInMemory(id)
         Prop(ok)
       }

@@ -97,6 +97,8 @@ class StateSpec extends AnyFunSuite {
     assert(m.get.contains(12L))
   }
 
+  // `ParquetBackingMap` is the former name of DiskBackingMap; the four
+  // tests that carry it run against DiskBackingMap under their old names
   test("ParquetBackingMap: q53 word-count survives a process restart, matches memory path") {
     import org.apache.spark.sql.{functions => F}
     import graft.api.Fields
@@ -107,8 +109,8 @@ class StateSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pbm").toString
-    try {
+    TempDirs.withTempDir("graft-pbm") { dirP =>
+      val dir = dirP.toString
 
       val batches = Seq(
         Seq("the cat sat", "the dog sat"),
@@ -124,8 +126,8 @@ class StateSpec extends AnyFunSuite {
       val mem = new OpaqueMap[Long](new MemoryBackingMap[OpaqueValue[Long]]("pbm-ref"))
 
       // batches 0,1 + an opaque replay of 1 with PERTURBED contents
-      val durable1 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-        spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 1))
+      val durable1 = new OpaqueMap[Long](DiskBackingMap.open[OpaqueValue[Long]](
+        dir, DiskBackingMap.opaqueCodec, compactAfter = 1))
       for (s <- Seq(mem, durable1)) {
         apply(s, batches(0), 0L)
         apply(s, Seq("the cat NOPE"), 1L) // failed attempt of batch 1
@@ -133,17 +135,17 @@ class StateSpec extends AnyFunSuite {
       }
 
       // process restart: drop the in-memory engine, reopen from disk (this
-      // also compacts the WAL into a parquet snapshot: compactAfter=1)
-      ParquetBackingMap.close(dir)
-      val durable2 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-        spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 1))
+      // also flushes the WAL into a sorted run: compactAfter=1)
+      DiskBackingMap.close(dir)
+      val durable2 = new OpaqueMap[Long](DiskBackingMap.open[OpaqueValue[Long]](
+        dir, DiskBackingMap.opaqueCodec, compactAfter = 1))
       apply(durable2, batches(2), 2L)
       apply(mem, batches(2), 2L)
 
-      // and once more, now loading through the parquet snapshot path
-      ParquetBackingMap.close(dir)
-      val durable3 = new OpaqueMap[Long](ParquetBackingMap.open[OpaqueValue[Long]](
-        spark, dir, ParquetBackingMap.opaqueCodec, compactAfter = 64))
+      // and once more, now loading through the sorted-run path
+      DiskBackingMap.close(dir)
+      val durable3 = new OpaqueMap[Long](DiskBackingMap.open[OpaqueValue[Long]](
+        dir, DiskBackingMap.opaqueCodec, compactAfter = 64))
       val words = (batches.flatten.flatMap(_.split(" ")) :+ "NOPE").distinct.sorted
       val keys = words.map(w => Seq[Any](w))
       val durableCounts = words.zip(durable3.multiGet(keys)).toMap
@@ -153,22 +155,17 @@ class StateSpec extends AnyFunSuite {
       // opaque contract: a key only the FAILED attempt wrote keeps that value
       // (nothing re-writes it in the replay) — identically on both engines
       assert(durableCounts("NOPE") == Some(1L))
-      val snaps = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("snap-"))
-      assert(snaps.nonEmpty, "compaction produced no parquet snapshot")
-      ParquetBackingMap.close(dir)
-    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      val runs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("run-"))
+      assert(runs.nonEmpty, "compaction produced no sorted run")
+      DiskBackingMap.close(dir)
+    }
   }
 
   test("ParquetBackingMap: concurrent multiPut from many threads survives restart intact") {
-    lazy val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val dir = java.nio.file.Files.createTempDirectory("graft-pbm-conc").toString
-    try {
-      val store = ParquetBackingMap.open[String](
-        spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+    TempDirs.withTempDir("graft-pbm-conc") { dirP =>
+      val dir = dirP.toString
+      val store = DiskBackingMap.open[String](
+        dir, DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
       // 8 writers × 50 puts, each thread owns its key range (the partition
       // discipline partitionPersist gives executors) — every segment append
       // races through the shared engine
@@ -178,138 +175,158 @@ class StateSpec extends AnyFunSuite {
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
-      ParquetBackingMap.close(dir)
-      val reopened = ParquetBackingMap.open[String](
-        spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      DiskBackingMap.close(dir)
+      val reopened = DiskBackingMap.open[String](
+        dir, DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
       val keys = for (t <- 0 until 8; i <- 0 until 50) yield Seq[Any](s"k$t-$i")
       val got = reopened.multiGet(keys)
       assert(got.flatten.size == 400, s"lost ${400 - got.flatten.size} of 400 concurrent writes")
       assert(got.zip(keys).forall { case (v, k) =>
         v.contains(k.head.toString.replaceFirst("k", "v")) })
-      ParquetBackingMap.close(dir)
-    } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
+      DiskBackingMap.close(dir)
+    }
+  }
+
+  private def segs(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(dir)
+    try s.iterator().asScala.filter(
+      _.getFileName.toString.startsWith("seg-")).toSeq.sorted finally s.close()
   }
 
   test("ParquetBackingMap: a crash between snapshot-write and segment-delete replays identically (VERDICT r14 #7)") {
-    lazy val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val dirP = java.nio.file.Files.createTempDirectory("graft-pbm-crash")
-    val dir = dirP.toString
-    val store = ParquetBackingMap.open[String](
-      spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    (0 until 10).foreach(i =>
-      store.multiPut(Seq(Seq[Any](s"k$i")), Seq(s"v$i-final")))
-    store.multiPut(Seq(Seq[Any]("k3")), Seq("v3-rewritten")) // later segment wins
-    // stash the WAL, compact (snapshot + deletes), then RESTORE the stale
-    // segments — the on-disk state is now exactly the crash window between
-    // compact()'s snapshot `_SUCCESS` fence and its segment deletes
-    import scala.jdk.CollectionConverters._
-    def segs(): Seq[java.nio.file.Path] = {
-      val s = java.nio.file.Files.list(dirP)
-      try s.iterator().asScala.filter(
-        _.getFileName.toString.startsWith("seg-")).toSeq finally s.close()
+    TempDirs.withTempDir("graft-pbm-crash") { dirP =>
+      TempDirs.withTempDir("graft-pbm-stash") { stash =>
+        val dir = dirP.toString
+        val store = DiskBackingMap.open[String](
+          dir, DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
+        (0 until 10).foreach(i =>
+          store.multiPut(Seq(Seq[Any](s"k$i")), Seq(s"v$i-final")))
+        store.multiPut(Seq(Seq[Any]("k3")), Seq("v3-rewritten")) // later segment wins
+        // stash the WAL, compact (run + MANIFEST, then deletes), then RESTORE
+        // the stale segments — the on-disk state is now exactly the crash
+        // window between compact()'s MANIFEST replace and its segment deletes
+        val stashed = segs(dirP).map { p =>
+          val t = stash.resolve(p.getFileName)
+          java.nio.file.Files.copy(p, t); (t, p)
+        }
+        assert(stashed.nonEmpty)
+        val preCrash = store.scanAll().toSet
+        DiskBackingMap.compact(dir)
+        assert(segs(dirP).isEmpty)
+        stashed.foreach { case (t, p) => java.nio.file.Files.copy(t, p) }
+        // 'crash' + restart: the runs already hold the stale segments —
+        // state must match pre-crash exactly
+        DiskBackingMap.close(dir)
+        val reopened = DiskBackingMap.open[String](
+          dir, DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
+        assert(reopened.scanAll().toSet == preCrash)
+        assert(reopened.multiGet(Seq(Seq[Any]("k3"))) == Seq(Some("v3-rewritten")))
+        // post-crash writes land in segments seeded PAST the restored ones and
+        // win the next replay too
+        reopened.multiPut(Seq(Seq[Any]("k3")), Seq("v3-post-crash"))
+        DiskBackingMap.close(dir)
+        val again = DiskBackingMap.open[String](
+          dir, DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
+        assert(again.multiGet(Seq(Seq[Any]("k3"))) == Seq(Some("v3-post-crash")))
+        DiskBackingMap.close(dir)
+      }
     }
-    val stash = java.nio.file.Files.createTempDirectory("graft-pbm-stash")
-    val stashed = segs().map { p =>
-      val t = stash.resolve(p.getFileName)
-      java.nio.file.Files.copy(p, t); (t, p)
-    }
-    assert(stashed.nonEmpty)
-    val preCrash = store.scanAll().toSet
-    ParquetBackingMap.compact(dir)
-    assert(segs().isEmpty)
-    stashed.foreach { case (t, p) => java.nio.file.Files.copy(t, p) }
-    // 'crash' + restart: replay = snapshot, then the stale segments, which
-    // rewrite identical values — state must match pre-crash exactly
-    ParquetBackingMap.close(dir)
-    val reopened = ParquetBackingMap.open[String](
-      spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    assert(reopened.scanAll().toSet == preCrash)
-    assert(reopened.multiGet(Seq(Seq[Any]("k3"))) == Seq(Some("v3-rewritten")))
-    // post-crash writes land in segments seeded PAST the restored ones and
-    // win the next replay too
-    reopened.multiPut(Seq(Seq[Any]("k3")), Seq("v3-post-crash"))
-    ParquetBackingMap.close(dir)
-    val again = ParquetBackingMap.open[String](
-      spark, dir, ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
-    assert(again.multiGet(Seq(Seq[Any]("k3"))) == Seq(Some("v3-post-crash")))
-    ParquetBackingMap.close(dir)
-    graft.util.Fs.deleteRecursively(dirP)
-    graft.util.Fs.deleteRecursively(stash)
   }
 
   test("ParquetBackingMap: replay order survives a 'reboot' (clock-independent WAL names)") {
-    lazy val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val dir = java.nio.file.Files.createTempDirectory("graft-pbm-boot")
-    try {
+    TempDirs.withTempDir("graft-pbm-boot") { dir =>
       // a segment left by a 'previous boot' whose name encodes a huge
       // timestamp-like number — a clock-derived naming scheme would sort any
       // post-reboot write BEFORE it and replay stale data on top of new
       java.nio.file.Files.writeString(dir.resolve(f"seg-${Long.MaxValue / 2}%020d-deadbeef.jsonl"),
         "[\"k\"]\t[\"old\"]\n")
-      val s1 = ParquetBackingMap.open[String](spark, dir.toString,
-        ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      val s1 = DiskBackingMap.open[String](dir.toString,
+        DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
       assert(s1.multiGet(Seq(Seq[Any]("k"))) == Seq(Some("old")))
       s1.multiPut(Seq(Seq[Any]("k")), Seq("new")) // post-'reboot' write
-      ParquetBackingMap.close(dir.toString)
-      val s2 = ParquetBackingMap.open[String](spark, dir.toString,
-        ParquetBackingMap.nonTransactionalCodec, compactAfter = 1000)
+      DiskBackingMap.close(dir.toString)
+      val s2 = DiskBackingMap.open[String](dir.toString,
+        DiskBackingMap.nonTransactionalCodec, compactAfter = 1000)
       assert(s2.multiGet(Seq(Seq[Any]("k"))) == Seq(Some("new")),
         "post-reboot write must replay AFTER the pre-reboot segment")
-      ParquetBackingMap.close(dir.toString)
-    } finally graft.util.Fs.deleteRecursively(dir)
+      DiskBackingMap.close(dir.toString)
+    }
+  }
+
+  test("DiskBackingMap: a WAL segment already folded into runs never replays, and new segments number past it") {
+    TempDirs.withTempDir("graft-dbm-stale") { dirP =>
+      val dir = dirP.toString
+      def openIt() = DiskBackingMap.open[String](dir, DiskBackingMap.nonTransactionalCodec)
+      def get(m: DiskBackingMap[String]) = m.multiGet(Seq(Seq[Any]("k"))).head
+      val m = openIt()
+      m.multiPut(Seq(Seq[Any]("k")), Seq("a"))
+      val Seq(first) = segs(dirP)
+      val firstBytes = java.nio.file.Files.readAllBytes(first)
+      DiskBackingMap.compact(dir)
+      m.multiPut(Seq(Seq[Any]("k")), Seq("b"))
+      DiskBackingMap.compact(dir)
+      // a lost delete: k=a's segment outlives both flushes
+      java.nio.file.Files.write(first, firstBytes)
+      DiskBackingMap.close(dir)
+      val m2 = openIt()
+      assert(get(m2).contains("b"), "a folded segment replayed over newer data")
+      assert(segs(dirP).isEmpty, "the folded segment was not deleted at open")
+      // a restart after the flushes must not restart numbering below it
+      m2.multiPut(Seq(Seq[Any]("k")), Seq("c"))
+      val Seq(next) = segs(dirP)
+      assert(next.getFileName.toString > first.getFileName.toString,
+        s"$next numbered at or below the folded $first")
+      java.nio.file.Files.write(first, firstBytes)
+      DiskBackingMap.close(dir)
+      assert(get(openIt()).contains("c"))
+      DiskBackingMap.close(dir)
+    }
   }
 
   test("DiskBackingMap (r16 bounded-heap tier): roundtrip, overwrite, tombstones, LSM merges, restart replay, crash-window WAL") {
-    val dir = java.nio.file.Files.createTempDirectory("diskmap-spec")
-    val path = dir.toString
-    // flushAfterKeys=4 forces flushes + cascading merges constantly
-    def openIt() = DiskBackingMap.open[Long](path,
-      ParquetBackingMap.nonTransactionalCodec, flushAfterKeys = 4)
-    val m = openIt()
-    val ref = scala.collection.mutable.Map.empty[Long, Long]
-    val rnd = new scala.util.Random(7)
-    (0 until 200).foreach { i =>
-      val k = rnd.nextInt(40).toLong
-      if (rnd.nextInt(5) == 0 && ref.nonEmpty) {
-        val dk = ref.keys.toSeq(rnd.nextInt(ref.size))
-        m.multiRemove(Seq(Seq[Any](dk))); ref.remove(dk)
-      } else {
-        m.multiPut(Seq(Seq[Any](k)), Seq(i.toLong)); ref(k) = i.toLong
+    TempDirs.withTempDir("diskmap-spec") { dir =>
+      val path = dir.toString
+      // flushAfterKeys=4 forces flushes + cascading merges constantly
+      def openIt() = DiskBackingMap.open[Long](path,
+        DiskBackingMap.nonTransactionalCodec, flushAfterKeys = 4)
+      val m = openIt()
+      val ref = scala.collection.mutable.Map.empty[Long, Long]
+      val rnd = new scala.util.Random(7)
+      (0 until 200).foreach { i =>
+        val k = rnd.nextInt(40).toLong
+        if (rnd.nextInt(5) == 0 && ref.nonEmpty) {
+          val dk = ref.keys.toSeq(rnd.nextInt(ref.size))
+          m.multiRemove(Seq(Seq[Any](dk))); ref.remove(dk)
+        } else {
+          m.multiPut(Seq(Seq[Any](k)), Seq(i.toLong)); ref(k) = i.toLong
+        }
       }
+      def stored(mm: DiskBackingMap[Long]): Map[Long, Long] =
+        mm.scanAll().map { case (k, v) =>
+          k.head.asInstanceOf[Long] -> v.asInstanceOf[Long] }.toMap
+      assert(stored(m) == ref.toMap)
+      // point reads (runs + memtable + bloom + block cache paths)
+      (0L until 40L).foreach { k =>
+        assert(m.multiGet(Seq(Seq[Any](k))).head == ref.get(k), s"key $k")
+      }
+      // restart: replay from MANIFEST runs + WAL
+      DiskBackingMap.close(path)
+      val m2 = openIt()
+      assert(stored(m2) == ref.toMap, "restart divergence")
+      (0L until 40L).foreach { k =>
+        assert(m2.multiGet(Seq(Seq[Any](k))).head == ref.get(k), s"post-restart $k")
+      }
+      // crash window: a put whose WAL landed but no flush ran — replay wins
+      m2.multiPut(Seq(Seq[Any](999L)), Seq(123L))
+      DiskBackingMap.close(path) // process exit with live WAL segments
+      val m3 = openIt()
+      assert(m3.multiGet(Seq(Seq[Any](999L))).head.contains(123L))
+      // compact folds everything into one run; contents unchanged
+      DiskBackingMap.compact(path)
+      assert(stored(m3) == ref.toMap + (999L -> 123L))
+      DiskBackingMap.close(path)
     }
-    def stored(mm: DiskBackingMap[Long]): Map[Long, Long] =
-      mm.scanAll().map { case (k, v) =>
-        k.head.asInstanceOf[Long] -> v.asInstanceOf[Long] }.toMap
-    assert(stored(m) == ref.toMap)
-    // point reads (runs + memtable + bloom + block cache paths)
-    (0L until 40L).foreach { k =>
-      assert(m.multiGet(Seq(Seq[Any](k))).head == ref.get(k), s"key $k")
-    }
-    // restart: replay from MANIFEST runs + WAL
-    DiskBackingMap.close(path)
-    val m2 = openIt()
-    assert(stored(m2) == ref.toMap, "restart divergence")
-    (0L until 40L).foreach { k =>
-      assert(m2.multiGet(Seq(Seq[Any](k))).head == ref.get(k), s"post-restart $k")
-    }
-    // crash window: a put whose WAL landed but no flush ran — replay wins
-    m2.multiPut(Seq(Seq[Any](999L)), Seq(123L))
-    DiskBackingMap.close(path) // process exit with live WAL segments
-    val m3 = openIt()
-    assert(m3.multiGet(Seq(Seq[Any](999L))).head.contains(123L))
-    // checkpoint folds everything into one run; contents unchanged
-    DiskBackingMap.checkpoint(path)
-    assert(stored(m3) == ref.toMap + (999L -> 123L))
-    DiskBackingMap.close(path)
-    graft.util.Fs.deleteRecursively(dir)
   }
 
   test("MicroBatchBackingMap chunks bulk calls; CachedMap caches reads") {

@@ -300,7 +300,7 @@ class StateStoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("inc-disk").toString
     try {
       // tiny flushAfterKeys forces real LSM behavior (flushes + merges)
-      val inc1 = graft.streaming.IncrementalClusters.durableDisk(dir,
+      val inc1 = graft.streaming.IncrementalClusters.durable(dir,
         flushAfterKeys = 4)
       inc1.applyBatchScored(
         Seq((2L, 7L, 10.0, 50.0), (7L, 9L, 50.0, 5.0))
@@ -308,9 +308,9 @@ class StateStoreSpec extends AnyFunSuite {
       inc1.applyBatchScored(
         Seq((5L, 6L, 1.0, 2.0)).toDF("a", "b", "qa", "qb"),
         "a", "b", "qa", "qb", 1L)
-      graft.streaming.IncrementalClusters.closeDurableDisk(dir)
+      graft.streaming.IncrementalClusters.closeDurable(dir)
       // restart: same labels from disk
-      val inc2 = graft.streaming.IncrementalClusters.durableDisk(dir,
+      val inc2 = graft.streaming.IncrementalClusters.durable(dir,
         flushAfterKeys = 4)
       assert(inc2.snapshot(spark).as[(Long, Long)].collect().toMap ==
         Map(2L -> 2L, 7L -> 2L, 9L -> 2L, 5L -> 5L, 6L -> 5L))
@@ -335,7 +335,7 @@ class StateStoreSpec extends AnyFunSuite {
       assert(bestKeys == Set(Seq(1L)), s"dead best entries not GC'd: $bestKeys")
       // distributed faces == driver faces (read the on-disk runs + WAL)
       val distLabels = graft.streaming.IncrementalClusters
-        .snapshotDistributedDisk(spark, dir).as[(Long, Long)].collect().toMap
+        .snapshotDistributed(spark, dir).as[(Long, Long)].collect().toMap
       assert(distLabels == expect, s"distributed disk labels: $distLabels")
       // compactState folds chains: every stored link points at its root
       inc2.compactState(100L)
@@ -346,10 +346,10 @@ class StateStoreSpec extends AnyFunSuite {
       }
       assert(inc2.snapshot(spark).as[(Long, Long)].collect().toMap == expect)
       assert(graft.streaming.IncrementalClusters
-        .snapshotDistributedDisk(spark, dir)
+        .snapshotDistributed(spark, dir)
         .as[(Long, Long)].collect().toMap == expect)
     } finally {
-      graft.streaming.IncrementalClusters.closeDurableDisk(dir)
+      graft.streaming.IncrementalClusters.closeDurable(dir)
       graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(dir))
     }
   }
@@ -358,7 +358,7 @@ class StateStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("inc-dist").toString
     try {
-      val inc = graft.streaming.IncrementalClusters.durable(spark, dir)
+      val inc = graft.streaming.IncrementalClusters.durable(dir)
       inc.applyBatchScored(
         Seq((2L, 7L, 10.0, 50.0), (20L, 21L, 9.0, 3.0))
           .toDF("a", "b", "qa", "qb"), "a", "b", "qa", "qb", 0L)
@@ -395,12 +395,12 @@ class StateStoreSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("inc-durable").toString
     try {
       // session 1: two batches, then process exit
-      val inc1 = graft.streaming.IncrementalClusters.durable(spark, dir)
+      val inc1 = graft.streaming.IncrementalClusters.durable(dir)
       inc1.applyBatch(Seq((2L, 7L), (7L, 9L)).toDF("a", "b"), "a", "b", 0L)
       inc1.applyBatch(Seq((5L, 6L)).toDF("a", "b"), "a", "b", 1L)
       graft.streaming.IncrementalClusters.closeDurable(dir)
       // session 2: replay from disk; a batch that merges ACROSS the restart
-      val inc2 = graft.streaming.IncrementalClusters.durable(spark, dir)
+      val inc2 = graft.streaming.IncrementalClusters.durable(dir)
       assert(inc2.snapshot(spark).as[(Long, Long)].collect().toMap ==
         Map(2L -> 2L, 7L -> 2L, 9L -> 2L, 5L -> 5L, 6L -> 5L))
       val out = inc2.applyBatch(Seq((6L, 9L), (1L, 2L)).toDF("a", "b"),
